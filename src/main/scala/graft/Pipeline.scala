@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.RiskFeatures
 import graft.norm.Normalizer
-import graft.operators.{BurstDetector, ToolScanner}
+import graft.operators.{BurstDetector, ToolScanner, Widen}
 import graft.query.{FilterOptions, Filters}
 import graft.rules.{GraftConfig, RuleEngine}
 import graft.session.Sessionizer
@@ -15,9 +15,19 @@ import graft.sources.{LogSources, ParsedLogs}
   *
   * parse -> dedup -> utc time -> sessionize -> request_count ->
   * risk features -> rule engine -> burst detector -> tool scanner ->
-  * filters -> sink. Stages are lazy DataFrame transforms; the normalized
-  * + scored frame should be `.cache()`d by callers that re-filter
-  * interactively (the reference keeps it resident — SURVEY §3 entry 3).
+  * filters -> sink. The reference keeps its parsed, deduplicated and
+  * sessionized table resident and runs every detector and filter over
+  * it (SURVEY §3 entry 3). Here the two frames that branch — the parse
+  * result ([[graft.sources.LineParser.parse]]) and the output of
+  * [[normalize]] — are materialized once when they fit the
+  * `spark.graft.widen.maxBytes` guard ([[graft.operators.Widen.materialize]]),
+  * so under the guard `LineParser.parse`, `LogSources.parseLogs`,
+  * [[normalize]] and [[run]] each run jobs when called, and a pass
+  * scans and parses every input once, however many actions follow.
+  * Score and filter stay lazy: callers that re-filter interactively
+  * re-run only them, over the materialized normalized frame. Above
+  * the guard every stage is a lazy transform, as at any scale where
+  * holding the table is not an option.
   */
 object Pipeline {
 
@@ -32,13 +42,22 @@ object Pipeline {
 
   /** Normalize + sessionize an already-parsed frame. Adds a stable
     * `_row_id` used as the pandas-row-order stand-in (SURVEY §7.4.2).
+    *
+    * The result feeds every detector of [[score]], so it is
+    * materialized when it fits the byte guard ([[Widen.materialize]]):
+    * this call then runs the dedup and sessionize jobs. The guard
+    * reads this frame's own plan estimate. Spark's size-only estimate
+    * of an inner join is the sum of its sides, so the sessionizer's
+    * two joins keep it at about 1.1x the parse result's estimate and
+    * linear in the input: the two guards switch off at nearly the same
+    * input size (MaterializeSpec pins this).
     */
   def normalize(parsed: DataFrame, opts: Options = Options()): DataFrame = {
     val withId = parsed.withColumn("_row_id", monotonically_increasing_id())
     val deduped = Normalizer.removeDuplicates(withId, col("_row_id"))
     val timed = Normalizer.withUtcTimestamp(deduped, opts.timeOffsetSeconds, opts.strictTimestamps)
     val clustered = Sessionizer.withClusters(timed, opts.sessionGapSeconds)
-    Sessionizer.withRequestCount(clustered)
+    Widen.materialize(Sessionizer.withRequestCount(clustered))
   }
 
   /** Risk stage (reference triage.py:241-245 order: balatro ->
@@ -62,7 +81,10 @@ object Pipeline {
     ToolScanner(burst, config.toolSignatures)
   }
 
-  /** Full pipeline from raw log paths. */
+  /** Full pipeline from raw log paths. Under the byte guard the parse
+    * and normalize steps run their jobs during this call; score and
+    * filter stay lazy.
+    */
   def run(
       spark: SparkSession,
       paths: Seq[String],
@@ -84,8 +106,8 @@ object Pipeline {
     * `--from-stage <dir>` queries it.
     *
     * With `strictTimestamps` the C10 hard-error check rides the write
-    * itself ([[writeStageChecked]]) instead of running `withUtcTimestamp`'s
-    * separate eager scan — the cold staging path parses the text ONCE.
+    * itself ([[writeStageChecked]]) instead of [[normalize]]'s eager
+    * check, which above the byte guard is a separate scan of the text.
     */
   def stage(spark: SparkSession, paths: Seq[String], dir: String,
       opts: Options = Options()): Unit = {

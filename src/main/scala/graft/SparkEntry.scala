@@ -665,11 +665,12 @@ object SparkEntry {
     // each — only the widen exchange below it is reused, so the
     // heaviest expression of the whole pipeline evaluated twice
     // (round-17 probe: the staged chain runs ~1.7 s warm vs 3.7 s
-    // monolithic at sf0.1)
-    val cleaned = graft.operators.Widen.widen(table(s, dir, "documents"))
-      .select(col("doc_id"),
-        graft.textops.TextAnalysis.cleanText(col("text"), stripTags = true).as("text"))
-      .localCheckpoint()
+    // monolithic at sf0.1). Byte-guarded: above the guard nothing is
+    // materialized and both consumers recompute the cleaning
+    val cleaned = graft.operators.Widen.materialize(
+      graft.operators.Widen.widen(table(s, dir, "documents"))
+        .select(col("doc_id"),
+          graft.textops.TextAnalysis.cleanText(col("text"), stripTags = true).as("text")))
     val withLang = cleaned.withColumn("lang_pred",
       graft.textops.TextAnalysis.languageId(col("text")))
     val quality = withLang

@@ -161,8 +161,8 @@ object Triage {
           args.stageDir match {
             case Some(stage) =>
               // strict C10 check rides the stage write (observe metric)
-              // instead of withUtcTimestamp's separate eager scan — the
-              // cold staging path parses the text once, not twice
+              // instead of normalize's eager check, which above the byte
+              // guard is a second scan of the text
               val norm = Pipeline.normalize(parsedLogs.parsed,
                 Pipeline.Options(timeOffsetSeconds = args.timeOffset,
                   strictTimestamps = false))

@@ -19,9 +19,13 @@ object Normalizer {
     * `dd/MMM/yyyy:HH:mm:ss Z`, IIS `yyyy-MM-dd HH:mm:ss` assumed UTC
     * (session time zone is pinned to UTC). Unknown formats are a hard
     * error in the reference (dataframe.py:218-220); with `strict=true`
-    * we fail fast if any row yields a null timestamp (costs one extra
-    * action — disable for very large batch runs where the parse stage
-    * already guarantees the format).
+    * we fail fast if any row yields a null timestamp. The check is its
+    * own action over `df`'s lineage: in [[graft.Pipeline.normalize]]
+    * under the byte guard that lineage starts at the materialized
+    * parse result, so it costs a pass over in-memory rows; above the
+    * guard it re-reads and re-parses the text. Disable it for very
+    * large batch runs where the parse stage already guarantees the
+    * format.
     *
     * C11 — `timeOffset` seconds are added for clock-skew correction
     * (reference dataframe.py:239-240).

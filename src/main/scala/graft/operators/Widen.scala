@@ -73,6 +73,31 @@ object Widen {
     else df
   }
 
+  /** Materialize a frame that feeds two or more consumers, so each of
+    * them reads it once from executor storage instead of inlining and
+    * recomputing its whole subtree. Same byte guard as [[widen]]: a
+    * small frame is `localCheckpoint`ed eagerly (one job, now), a large
+    * one — or one whose size is unknown — is returned as it is, so
+    * nothing is materialized before its bound is checked.
+    *
+    * `localCheckpoint`, not `persist`: it cuts the lineage, so every
+    * consumer plans over a short `LogicalRDD` scan, and the context
+    * cleaner drops the blocks once the frame is unreachable, where a
+    * `persist`ed frame stays pinned in the cache manager until someone
+    * unpersists it. The checkpointed frame keeps the original plan's
+    * statistics, so guards and join planning above it see the same
+    * sizes.
+    *
+    * The trade-off: a local checkpoint's blocks live only on the
+    * executors that computed them, and there is no lineage to rebuild
+    * them from. If one of those executors is lost before the last
+    * action on the frame, that action fails instead of recomputing.
+    * Harmless on `local[N]`; on a cluster the byte guard is what keeps
+    * large inputs on recomputable lineage.
+    */
+  def materialize(df: DataFrame): DataFrame =
+    if (isSmall(df)) df.localCheckpoint(eager = true) else df
+
   private def targetOf(df: DataFrame): Int = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.widen.parallelism")

@@ -55,11 +55,18 @@ object Sessionizer {
     *  - no RDD barrier (stays whole-stage-codegen'd, resumable by AQE),
     *  - no eager driver job at plan-construction time,
     *  - the groups aggregate reuses the window's (source, ip) hash
-    *    partitioning (no new exchange), and the join back is on the
-    *    same key — ONE full-frame shuffle for the whole sessionize
-    *    chain, with the big-side subtree shared via exchange reuse
-    *    instead of recomputed per branch (the RDD version computed the
-    *    lag/cumsum window 2-3x across jobs).
+    *    partitioning (no new exchange of its own), and the join back is
+    *    on the same key.
+    *
+    * The big side is NOT shared between branches, though. Column
+    * pruning gives the groups branch a narrower (source, ip) exchange
+    * than the join's full-row one, so exchange reuse cannot merge them:
+    * the executed plan holds two copies of `withLocal`'s subtree (the
+    * lag/cumsum window and everything under it, e.g. normalize's dedup
+    * shuffle), and only the two consumers of `groups` share one
+    * exchange. [[graft.Pipeline.normalize]] materializes its OUTPUT
+    * (under the byte guard), so the detectors downstream read the
+    * sessionized rows once; the two copies inside this plan remain.
     *
     * The running total itself nests two levels so no task ever sees the
     * full (source, ip) key space (10⁸–10⁹ pairs at the 100 TB design

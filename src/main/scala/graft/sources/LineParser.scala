@@ -81,13 +81,22 @@ object LineParser {
     * reference parser.py:121-124) with their source. Dispatch + fixups
     * live in the single [[ParseLogLine]] expression (see its scaladoc
     * for why that beats a struct-`coalesce` here).
+    *
+    * `parsed` and `errors` both read the one parse result: below the
+    * `spark.graft.widen.maxBytes` guard it is materialized
+    * ([[graft.operators.Widen.materialize]]), so this call runs one
+    * job that scans and parses the input, and every later action on
+    * either frame reads that result instead of the text. Above the
+    * guard both stay lazy and each action re-parses.
     */
   def parse(lines: DataFrame): ParsedLogs = {
     val trimmed = lines
       .withColumn("_line", trim(stripGrepPrefix(col("value"))))
       .filter(!isSkippable(col("_line")))
-    val withStruct = trimmed
-      .withColumn("_p", ParseLogLine.parse_log_line(col("_line")))
+    // only what the two branches read: the raw `value` would otherwise
+    // ride into the materialized result (pruning stops at a checkpoint)
+    val withStruct = graft.operators.Widen.materialize(trimmed
+      .select(col("source"), col("_line"), ParseLogLine.parse_log_line(col("_line")).as("_p")))
     val parsed = withStruct
       .filter(col("_p").isNotNull)
       .select(col("source"), col("_p.*"))

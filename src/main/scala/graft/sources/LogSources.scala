@@ -63,7 +63,11 @@ object LogSources {
     all.reduce(_ unionByName _)
   }
 
-  /** Scan + parse: the S1..S7 front half of the pipeline. */
+  /** Scan + parse: the S1..S7 front half of the pipeline. Under the
+    * `spark.graft.widen.maxBytes` guard the parse result is
+    * materialized here, so this call runs one job that scans every
+    * input ([[LineParser.parse]]).
+    */
   def parseLogs(spark: SparkSession, paths: Seq[String]): ParsedLogs =
     LineParser.parse(readLines(spark, paths))
 }
