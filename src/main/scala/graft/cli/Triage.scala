@@ -108,6 +108,8 @@ object Triage {
     require(args.limit >= 0, "--limit must be >= 0 (0 = unbounded)")
 
     val spark = SparkSession.builder()
+      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-triage")

@@ -64,23 +64,17 @@ object Dedup {
       .distinct()
       .localCheckpoint(true)
     // Scale-adaptive small-graph path (opt guide §1.2 "choose the
-    // distributed algorithm"): when the materialized edge set is
-    // BOUNDED (<= spark.graft.cc.localEdgeLimit, default 200k rows of
-    // two ids — a few MB on the driver, the broadcast-join size class)
-    // and ids are integral, a driver-side union-find produces the
-    // identical min-reachable-id labeling in one pass: 2 jobs total
-    // (count + collect over the already-checkpointed blocks) and ONE
+    // distributed algorithm"): when [[Widen.collectSmall]] admits the
+    // materialized edge set (its id_a < id_b half; sym is symmetric)
+    // and the vertex ids are integral too, a driver-side union-find
+    // gives the identical min-reachable-id labeling in one pass and ONE
     // broadcast join back, instead of >= 2 label-propagation rounds of
-    // 2 shuffle joins + checkpoint + count each. Above the limit (the
-    // 100 TB near-dup graph) the loop below runs unchanged.
-    val localLimit = vertices.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeLimit").map(_.toLong).getOrElse(200000L)
-    val integralIds = vertices.schema(idCol).dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    if (integralIds && sym.count() <= localLimit) {
+    // 2 shuffle joins + checkpoint + count each. Otherwise (the 100 TB
+    // near-dup graph) the loop below runs unchanged.
+    val local =
+      if (!Widen.integralIds(vertices, idCol)) None
+      else Widen.collectSmall(sym.filter(col("id_a") < col("id_b")), "id_a", "id_b")
+    if (local.isDefined) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -91,13 +85,10 @@ object Dedup {
         }
         r
       }
-      // only (id_a < id_b) needed; sym is symmetric-closed, halve it
-      sym.filter(col("id_a") < col("id_b"))
-        .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        .collect().foreach { row =>
-          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-        }
+      local.get.foreach { row =>
+        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+      }
       sym.unpersist()
       val entries = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
       parent.keySet().forEach(k => entries += ((k, find(k))))

@@ -114,24 +114,16 @@ object LinkGraph {
         greatest(col("a"), col("b")).as("b"))
       .distinct()
 
-  /** Edge-row bound below which graph fixed points run on the driver
-    * (one bounded collect + a tight loop) instead of as shuffle-join
-    * rounds — the broadcast-join size class, conf-overridable. Above
-    * it (the 100 TB web graph) the distributed paths run unchanged.
-    */
-  private[graft] def localEdgeLimit(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.graph.localEdgeLimit")
-      .map(_.toLong).getOrElse(200000L)
-
   private def triangleCountsFromUnd(und: DataFrame): DataFrame = {
     // Scale-adaptive small-graph path (guide §1.2): `und` arrives
-    // checkpointed from both callers, so the count is a cheap probe of
-    // materialized blocks. Below the limit, count triangles on the
-    // driver with the SAME degree-ordered orientation — identical
-    // (id, n_triangles) rows — for 2 jobs instead of a checkpointed
+    // checkpointed from both callers, so the bounded collect reads
+    // materialized blocks. When [[Widen.collectSmall]] admits it, count
+    // triangles on the driver with the SAME degree-ordered orientation
+    // — identical (id, n_triangles) rows — instead of a checkpointed
     // orientation join + wedge self-join + semi-join + aggregation.
-    if (und.count() <= localEdgeLimit(und)) {
-      val rows = und.select(col("a").cast("long"), col("b").cast("long")).collect()
+    val local = Widen.collectSmall(und, "a", "b")
+    if (local.isDefined) {
+      val rows = local.get
       val deg = new java.util.HashMap[Long, Long]()
       rows.foreach { r =>
         deg.merge(r.getLong(0), 1L, Long.box(_) + Long.box(_))
@@ -287,51 +279,40 @@ object LinkGraph {
     // neighbors entered `dirty` through the removed edges).
     //
     // Scale-adaptive small-graph path (the rankLoop/triangle
-    // discipline): `e` is checkpointed above, so the count is a cheap
-    // block probe. Below localEdgeLimit the SAME seeded BFS runs as a
-    // driver loop over one bounded collect — identical reached set —
-    // instead of maxHops rounds of join+distinct+anti-join, each
-    // behind a localCheckpoint and a count job. Non-integral or null
-    // ids fall back to the distributed closure (GraphAnn's fail-closed
-    // contract); above the limit the 100 TB path is untouched.
-    val localReached: Option[DataFrame] =
-      if (e.count() > localEdgeLimit(e)) None
-      else try {
-        val seedRows = dirty.join(ids, Seq("id")).distinct()
-          .select(col("id").cast("long")).collect()
-        if (seedRows.exists(_.isNullAt(0))) None
-        else {
-          val eRows = e.select(col("src").cast("long"), col("dst").cast("long"))
-            .collect()
-          if (eRows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-          else {
-            val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-            eRows.foreach { r =>
-              val (s0, d0) = (r.getLong(0), r.getLong(1))
-              adj.computeIfAbsent(s0, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += d0
-              adj.computeIfAbsent(d0, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += s0
-              ()
-            }
-            val seen = new java.util.HashSet[Long]()
-            var front = seedRows.map(_.getLong(0)).toList
-            front.foreach(seen.add)
-            var hop0 = 0
-            while (front.nonEmpty && hop0 < maxHops) {
-              front = front.flatMap(u =>
-                Option(adj.get(u)).toList.flatten.filter(seen.add))
-              hop0 += 1
-            }
-            require(front.isEmpty,
-              s"pageRankDelta: closure did not converge in $maxHops hops")
-            val spark = nodes.sparkSession
-            import spark.implicits._
-            val idT = nodes.schema(idCol).dataType
-            Some(scala.jdk.CollectionConverters.SetHasAsScala(seen)
-              .asScala.toSeq.sorted.toDF("_prid")
-              .select(col("_prid").cast(idT).as("id")))
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
+    // discipline): when [[Widen.collectSmall]] admits the checkpointed
+    // edges and the seeds, the SAME seeded BFS runs as a driver loop —
+    // identical reached set — instead of maxHops rounds of
+    // join+distinct+anti-join, each behind a localCheckpoint and a
+    // count job. Otherwise the distributed closure below runs.
+    val localReached: Option[DataFrame] = for {
+      eRows <- Widen.collectSmall(e, "src", "dst")
+      seedRows <- Widen.collectSmall(dirty.join(ids, Seq("id")).distinct(), "id")
+    } yield {
+      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+      eRows.foreach { r =>
+        val (s0, d0) = (r.getLong(0), r.getLong(1))
+        adj.computeIfAbsent(s0, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += d0
+        adj.computeIfAbsent(d0, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += s0
+        ()
+      }
+      val seen = new java.util.HashSet[Long]()
+      var front = seedRows.map(_.getLong(0)).toList
+      front.foreach(seen.add)
+      var hop0 = 0
+      while (front.nonEmpty && hop0 < maxHops) {
+        front = front.flatMap(u =>
+          Option(adj.get(u)).toList.flatten.filter(seen.add))
+        hop0 += 1
+      }
+      require(front.isEmpty,
+        s"pageRankDelta: closure did not converge in $maxHops hops")
+      val spark = nodes.sparkSession
+      import spark.implicits._
+      val idT = nodes.schema(idCol).dataType
+      scala.jdk.CollectionConverters.SetHasAsScala(seen)
+        .asScala.toSeq.sorted.toDF("_prid")
+        .select(col("_prid").cast(idT).as("id"))
+    }
     val reached = localReached.getOrElse {
       // No distinct on undir: duplicate edges only re-propagate
       // already-reached ids (the per-hop frontier distinct bounds
@@ -405,16 +386,17 @@ object LinkGraph {
 
     // Scale-adaptive small-graph path: nodeBase and edgesDeg are both
     // checkpointed above (the SAME materializations the distributed
-    // loop needs), so the two counts are cheap block probes. Below the
-    // limit, run the identical integer recurrence in a driver loop —
-    // per-edge contribution term and per-dst sum are exactly the
-    // distributed expressions (sums stay far below 2^63 at bounded
-    // edge counts, where the distributed path's decimal(38,0) guard
-    // matters only at ~1e12-node scale) — for 2 probe jobs instead of
-    // `iters` join+aggregate rounds with a checkpoint each.
-    if (nodeBase.count() + edgesDeg.count() <= localEdgeLimit(nodeBase)) {
-      val nb = nodeBase.select(col("id").cast("long"), col("_r0"), col("_base")).collect()
-      val ed = edgesDeg.select(col("src").cast("long"), col("dst").cast("long"), col("_b")).collect()
+    // loop needs), so the bounded collects read materialized blocks.
+    // When [[Widen.collectSmall]] admits both, run the identical
+    // integer recurrence in a driver loop — per-edge contribution term
+    // and per-dst sum are exactly the distributed expressions (sums
+    // stay far below 2^63 at bounded edge counts, where the distributed
+    // path's decimal(38,0) guard matters only at ~1e12-node scale) —
+    // instead of `iters` join+aggregate rounds with a checkpoint each.
+    val local = for {
+      ed <- Widen.collectSmall(edgesDeg, "src", "dst")
+      nb <- Widen.collectSmall(nodeBase, "id")
+    } yield {
       val r = new java.util.HashMap[Long, Long](nb.length * 2)
       nb.foreach { row => r.put(row.getLong(0), row.getLong(1)) }
       var it0 = 0
@@ -440,13 +422,13 @@ object LinkGraph {
       val spark = nodeBase.sparkSession
       import spark.implicits._
       val idT = nodes.schema(idCol).dataType
-      val outLocal = nb.map(row => (row.getLong(0), r.get(row.getLong(0)))).toSeq
-        .toDF("_prid", "rank")
-        .select(col("_prid").cast(idT).as(idCol), col("rank"))
       edgesDeg.unpersist()
       nodeBase.unpersist()
-      return outLocal
+      nb.map(row => (row.getLong(0), r.get(row.getLong(0)))).toSeq
+        .toDF("_prid", "rank")
+        .select(col("_prid").cast(idT).as(idCol), col("rank"))
     }
+    if (local.isDefined) return local.get
     var ranks = nodeBase.select(col("id"), col("_r0").as("r"))
       .localCheckpoint(true)
     var it = 0

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Parallelism floor for CPU-heavy NARROW passes (opt guide §2.6 —
   * idle capacity; the round-16 ProfileOne finding).
@@ -98,6 +101,48 @@ object Widen {
   def materialize(df: DataFrame): DataFrame =
     if (isSmall(df)) df.localCheckpoint(eager = true) else df
 
+  /** The one gate of every driver-local fast path (graph fixed points,
+    * union-find, the ANN walk): `Some(rows)` when `df` fits the driver
+    * and a loop over long ids is exact, else `None` and the caller runs
+    * its distributed operator unchanged. Checks, in order:
+    *  1. the byte guard of [[widen]], planning only. Fixed-width rows
+    *     are bounded by cap x row width and skip plan stats, which over
+    *     a checkpointed join run orders of magnitude high (sf0.01 edge
+    *     frames of 56 to 14 474 rows read 0.4-186 GB);
+    *  2. every `idCols` column has an integral type — the local loops
+    *     key on longs, and a lossy cast (2.5 -> 2, "007" -> 7) would
+    *     merge distinct ids the distributed joins keep apart;
+    *  3. one bounded `limit(cap + 1).collect()`, where cap is
+    *     `spark.graft.graph.localEdgeLimit` rows (default 200k, the
+    *     broadcast size class; <= 0 forces every caller distributed);
+    *  4. no `idCols` value is null.
+    * The returned rows keep `df`'s column order, with the id columns
+    * cast to long (lossless after check 2).
+    */
+  def collectSmall(df: DataFrame, idCols: String*): Option[Array[Row]] = {
+    val cap = df.sparkSession.conf.getOption("spark.graft.graph.localEdgeLimit")
+      .map(_.toLong).getOrElse(200000L)
+    val fields = df.schema.fields
+    val capBounded = fields.forall(f => UnsafeRow.isFixedLength(f.dataType)) &&
+      BigInt(cap) * (8 + fields.map(_.dataType.defaultSize).sum) <= maxBytes(df)
+    if (cap <= 0 || !(capBounded || isSmall(df)) || !integralIds(df, idCols: _*))
+      return None
+    val n = math.min(cap, Int.MaxValue - 1L).toInt
+    val rows = df.select(df.columns.toSeq.map(c =>
+        if (idCols.contains(c)) col(c).cast(LongType).as(c) else col(c)): _*)
+      .limit(n + 1).collect()
+    val ix = idCols.map(df.columns.indexOf(_))
+    if (rows.length > n || rows.exists(r => ix.exists(r.isNullAt))) None
+    else Some(rows)
+  }
+
+  /** Check 2 of [[collectSmall]], also for frames a caller does not collect. */
+  private[graft] def integralIds(df: DataFrame, cols: String*): Boolean =
+    cols.forall(c => df.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+
   private def targetOf(df: DataFrame): Int = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.widen.parallelism")
@@ -113,10 +158,11 @@ object Widen {
   // upward, and an OVERestimate merely skips the optimization. At
   // corpus scale sizeInBytes is huge, the guard fails, and widen
   // is the identity — no shuffle is added to the 100 TB path.
-  private def isSmall(df: DataFrame): Boolean = {
-    val maxBytes = df.sparkSession.conf.getOption("spark.graft.widen.maxBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
-    try df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
+  private def isSmall(df: DataFrame): Boolean =
+    try df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes(df)
     catch { case scala.util.control.NonFatal(_) => false }
-  }
+
+  private def maxBytes(df: DataFrame): Long =
+    df.sparkSession.conf.getOption("spark.graft.widen.maxBytes")
+      .map(_.toLong).getOrElse(256L * 1024 * 1024)
 }

@@ -471,15 +471,12 @@ object SpanDedup {
       evalTextCol: String, k: Int = 8,
       maxEvalWindows: Int = 5000000): DataFrame = {
     require(k >= 2, s"contaminationDashboardIndexed: k must be >= 2 (got $k)")
-    val evalW = evals.select(col(benchCol).as("_cd_b"),
-      col(evalIdCol).as("_cd_eid"),
-      explode(window_hashes(lower(coalesce(col(evalTextCol), lit(""))), k))
-        .as("_cd_wh"))
-      .distinct()
-      .localCheckpoint()
-    val nEvalW = evalW.count()
-    require(nEvalW <= maxEvalWindows,
-      s"contaminationDashboardIndexed: eval corpora exceed $maxEvalWindows " +
+    val evalW = evalWindowsChecked(
+      evals.select(col(benchCol).as("_cd_b"), col(evalIdCol).as("_cd_eid"),
+        explode(window_hashes(lower(coalesce(col(evalTextCol), lit(""))), k))
+          .as("_cd_wh")),
+      maxEvalWindows,
+      "contaminationDashboardIndexed: eval corpora exceed %d " +
         "distinct (benchmark, doc, window) triples; raise maxEvalWindows " +
         "only deliberately")
     val winPath = new org.apache.hadoop.fs.Path(s"$corpusIndexDir/windows.parquet")
@@ -573,19 +570,22 @@ object SpanDedup {
         col("contamination_x10000") - col("prev_x10000"))
   }
 
-  /** Distinct + eager localCheckpoint + bounded-size guard for an
-    * eval-window frame — the checkpoint is what lets the guard count,
-    * the broadcast build and the totals aggregate share ONE execution
-    * of the eval tokenize/explode/distinct.
+  /** Distinct + bounded-size guard + eager localCheckpoint for an
+    * eval-window frame. The guard is a bounded probe, so an oversized
+    * eval corpus fails before anything is materialized; the checkpoint
+    * then lets the broadcast build and the totals aggregate share ONE
+    * execution of the eval tokenize/explode/distinct.
     */
   private def evalWindowsChecked(
       raw: DataFrame, maxEvalWindows: Int, msgFmt: String): DataFrame = {
     require(maxEvalWindows > 0,
       s"evalWindows: maxEvalWindows must be positive (got $maxEvalWindows)")
-    val evalW = raw.distinct().localCheckpoint()
-    val n = evalW.count()
-    require(n <= maxEvalWindows, msgFmt.format(maxEvalWindows))
-    evalW
+    val evalW = raw.distinct()
+    // overflow-safe +1 (the decontaminate probe)
+    val probeLimit = math.min(maxEvalWindows.toLong + 1L, Int.MaxValue.toLong).toInt
+    require(evalW.limit(probeLimit).count() <= maxEvalWindows,
+      msgFmt.format(maxEvalWindows))
+    evalW.localCheckpoint()
   }
 
   /** Number of hash-derived partitions the span index's window file is

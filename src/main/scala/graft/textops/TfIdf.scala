@@ -96,6 +96,12 @@ object TfIdf {
   def cosineTopK(docs: DataFrame, idCol: String, textCol: String,
       probePred: Column, k: Int = 5, numBuckets: Int = 1024,
       stopBucketCap: Long = -1L): DataFrame = {
+    val probeIds = docs.filter(probePred)
+      .select(col(idCol).as("query_id")).distinct()
+    // the probe vectors broadcast below: bound the probe set before
+    // anything is checkpointed (the Ann bounded-queries contract)
+    graft.vector.Ann.requireBoundedQueries(probeIds, graft.vector.Ann.MaxQueries,
+      "TfIdf.cosineTopK")
     // the sparse model feeds BOTH the candidate index and the dense
     // vectors (two joins each) — checkpoint once or the tokenize+tf+df
     // lineage re-executes per consumer (the q65 multi-consumer
@@ -112,8 +118,6 @@ object TfIdf {
       else greatest(lit(8L), floor(col("n_docs") / 5).cast("long"))
     val idx = sp.filter(col("df") <= capExpr)
       .select("id", "bucket")
-    val probeIds = docs.filter(probePred)
-      .select(col(idCol).as("query_id")).distinct()
     val cand = idx.join(probeIds, col("id") === col("query_id"))
       .select(col("query_id"), col("bucket"))
       .join(idx.select(col("id").as("neighbor_id"), col("bucket")), "bucket")
@@ -125,10 +129,8 @@ object TfIdf {
     // broadcast: the old vec⋈vec chain shuffled the 8·numBuckets-byte
     // query vector attached to EVERY candidate pair through the
     // neighbor-side join; now the corpus-side vectors cross one
-    // shuffle and the query vectors cross zero. Probes are bounded by
-    // the caller's predicate (a probe set too large to broadcast
-    // belongs on [[graft.vector.Ann.cosineTopK]]'s bounded-queries
-    // contract anyway).
+    // shuffle and the query vectors cross zero. The probe set was
+    // bounded at the top (Ann.MaxQueries).
     val qvec = broadcast(
       denseFrom(sp.join(probeIds, col("id") === col("query_id"))
         .select("id", "bucket", "w"), numBuckets)

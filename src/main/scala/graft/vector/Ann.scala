@@ -33,7 +33,7 @@ object Ann {
   /** Fail fast if `queries` exceeds `maxQueries` rows. The probe job is
     * bounded: `limit(n+1).count()` stops scanning at n+1 rows.
     */
-  private[vector] def requireBoundedQueries(
+  private[graft] def requireBoundedQueries(
       queries: DataFrame, maxQueries: Int, api: String): Unit = {
     require(maxQueries > 0 && maxQueries < Int.MaxValue,
       s"$api: maxQueries must be in [1, ${Int.MaxValue - 1}], got $maxQueries " +

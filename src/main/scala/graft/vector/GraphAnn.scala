@@ -160,11 +160,11 @@ object GraphAnn {
   // of two narrow joins + a rank window, each behind a localCheckpoint
   // — correct and corpus-scalable, but at bench scale the ~10 job
   // rounds ARE the cost (the per-round frames hold <= queries × pool
-  // rows). When the materialized corpus, edge list, query set and
-  // entry table are all BOUNDED (<= spark.graft.ann.localWalkLimit
-  // rows each, default 200k — the broadcast size class, same
-  // discipline as spark.graft.cc.localEdgeLimit), the identical walk
-  // runs as a driver loop over one bounded collect per frame: same
+  // rows). When [[graft.operators.Widen.collectSmall]] admits the
+  // corpus, edge list, query set and entry table (the byte guard, then
+  // <= spark.graft.graph.localEdgeLimit rows each, default 200k — the
+  // broadcast size class every graph fast path shares), the identical
+  // walk runs as a driver loop over one bounded collect per frame: same
   // index-order double accumulation as [[DotProductExpr]], same
   // SQLOrderingUtil double ordering (primitive == then Double.compare:
   // -0.0 == 0.0, NaN greatest), same NULLS LAST on the descending
@@ -182,61 +182,33 @@ object GraphAnn {
     val entryByCell: Map[Int, Long] = entries.map(e => e._1 -> e._2).toMap
   }
 
-  private def localWalkLimit(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.ann.localWalkLimit")
-      .map(_.toLong).getOrElse(200000L)
-
-  /** Collect the walk's inputs iff every frame is bounded; None falls
-    * back to the distributed walk. Collect order: edges first (already
-    * localCheckpoint'ed by every caller — a cheap probe that vetoes
-    * the corpus scan when the graph alone is too big), then corpus.
+  /** Collect the walk's inputs iff [[graft.operators.Widen.collectSmall]]
+    * admits every frame; None falls back to the distributed walk.
+    * Collect order: edges first (already localCheckpoint'ed by every
+    * caller — a cheap probe that vetoes the corpus scan when the graph
+    * alone is too big), then corpus.
     */
   private def localCtxFor(
       corpus: DataFrame, idCol: String, vecCol: String,
       edges: DataFrame, entries: DataFrame, q: DataFrame,
       withCells: Boolean): Option[LocalCtx] = try {
-    val lim = localWalkLimit(corpus)
-    if (lim <= 0) return None
-    // Byte guard (round-16 ADVICE): the row cap alone admits 200k rows
-    // of high-dimensional vectors — multiple GB of boxed driver heap
-    // collected eagerly. Veto on PLAN-STATS bytes of the projected
-    // (id, vec) corpus before any collect (planning-only, the
-    // [[graft.operators.Widen]] discipline; an estimate failure or
-    // missing stats fails CLOSED to the distributed walk).
-    val maxBytes = corpus.sparkSession.conf
-      .getOption("spark.graft.ann.localWalkMaxBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
-    val corpusBytes =
-      try corpus.select(col(idCol), col(vecCol))
-        .queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    if (corpusBytes > maxBytes) return None
-    val cap = math.min(lim, Int.MaxValue - 2L).toInt
-    val eRows = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit(cap + 1).collect()
-    if (eRows.length > cap) return None
+    import graft.operators.Widen.collectSmall
+    // node ids cast to long exactly as [[baseWalk]] casts them
     val c = corpus.select(col(idCol).cast("long").as("node"),
       transform(col(vecCol), x => x.cast("double")).as("_cv"),
       Ann.l2norm(col(vecCol)).as("_cn"))
-    val cRows = c.limit(cap + 1).collect()
-    if (cRows.length > cap) return None
     val qCols =
       if (withCells) q.select(col("query_id"), col("_qv"), col("_qn"), col("_cells"))
       else q.select(col("query_id"), col("_qv"), col("_qn"))
-    val qRows = qCols.limit(cap + 1).collect()
-    if (qRows.length > cap) return None
-    val entryRows = entries
-      .select(col("cell").cast("int"), col("entry_id").cast("long"))
-      .limit(cap + 1).collect()
-    if (entryRows.length > cap) return None
-    // a null id/vector/norm anywhere would need the SQL three-valued
-    // walk mirrored null-for-null — not worth it; the distributed path
-    // is already exact for that shape
-    val anyNull = (cRows.iterator ++ qRows.iterator ++
-      eRows.iterator ++ entryRows.iterator)
-      .exists(r => (0 until r.length).exists(r.isNullAt))
-    if (anyNull) return None
+    val collected = for {
+      eRows <- collectSmall(edges.select("src", "dst"), "src", "dst")
+      cRows <- collectSmall(c, "node")
+      qRows <- collectSmall(qCols, "query_id")
+      entryRows <- collectSmall(
+        entries.select(col("cell").cast("int"), col("entry_id")), "entry_id")
+    } yield (eRows, cRows, qRows, entryRows)
+    if (collected.isEmpty) return None
+    val (eRows, cRows, qRows, entryRows) = collected.get
     val vecs = new scala.collection.mutable.LongMap[(Array[Double], Double)](cRows.length * 2)
     cRows.foreach { r =>
       val node = r.getLong(0)
@@ -257,9 +229,11 @@ object GraphAnn {
     Some(new LocalCtx(vecs, adj, queries,
       entryRows.map(r => (r.getInt(0), r.getLong(1)))))
   } catch {
-    // a shape the local mirror can't hold exactly (e.g. null vector
-    // ELEMENTS, which unbox-throw here but flow as nulls through the
-    // SQL walk) — serve it from the distributed path
+    // a shape the local mirror can't hold exactly — a null vector, norm
+    // or cell (ids are null-free), or null vector ELEMENTS, which throw
+    // here but flow as nulls through the SQL walk (mirroring the
+    // three-valued walk null-for-null is not worth it) — serve it from
+    // the distributed path
     case scala.util.control.NonFatal(_) => None
   }
 

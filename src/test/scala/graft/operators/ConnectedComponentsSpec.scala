@@ -6,6 +6,7 @@ import graft.GraftSparkSpec
 
 class ConnectedComponentsSpec extends GraftSparkSpec {
   import spark.implicits._
+  import LinkGraphSpec._
 
   test("chain, triangle, and isolated vertices resolve to min-id components") {
     val vertices = (1L to 9L).toDF("id")
@@ -56,5 +57,22 @@ class ConnectedComponentsSpec extends GraftSparkSpec {
     val comps = Dedup.connectedComponents(vertices, "id", edges)
       .select("component").distinct().collect().map(_.getLong(0)).toSeq
     assert(comps == Seq(1L))
+  }
+
+  test("row cap 0 forces the distributed labeling, same components") {
+    // the driver-side union-find takes every small graph; pin the
+    // propagation loop against it (checkpointed inputs, so only the
+    // local route's broadcast label table is a LocalRelation)
+    val vertices = (1L to 12L).toDF("id").localCheckpoint()
+    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (9L, 5L), (5L, 6L), (6L, 9L),
+      (11L, 10L)).toDF("id_a", "id_b").localCheckpoint()
+    val local = Dedup.connectedComponents(vertices, "id", edges)
+    assert(localRoute(local))
+    val dist = distributed(spark)(Dedup.connectedComponents(vertices, "id", edges))
+    assert(!localRoute(dist))
+    assert(sortedRows(dist) === sortedRows(local))
+    // non-integral vertex ids keep to the distributed labeling
+    val strV = (1 to 12).map(_.toString).toDF("id").localCheckpoint()
+    assert(!localRoute(Dedup.connectedComponents(strV, "id", edges)))
   }
 }

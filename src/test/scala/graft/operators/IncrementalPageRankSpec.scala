@@ -11,6 +11,7 @@ import graft.GraftSparkSpec
   */
 class IncrementalPageRankSpec extends GraftSparkSpec {
   import spark.implicits._
+  import LinkGraphSpec._
 
   // 30 components of 5 nodes: ids 5g..5g+4, edges 5g->5g+1->...->5g+4->5g
   private def ringNodes: DataFrame =
@@ -99,5 +100,40 @@ class IncrementalPageRankSpec extends GraftSparkSpec {
       ringNodes, ringEdges, prev, iters = 4)
       .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
     assert(run(2) === run(13))
+  }
+
+  test("string and fractional ids: delta path stays distributed and exact") {
+    // two 3-rings; the new snapshot adds one edge inside ring A. As
+    // longs "007" would merge with "7" (and "x" would not cast), 1.5
+    // with 1.0; the integral control pins that the route check sees
+    // the local route when it is taken.
+    val ring = Seq((0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (5, 3))
+    def run(ids: Seq[Any], nodes0: DataFrame,
+        edgesOf: Seq[(Int, Int)] => DataFrame): Unit = {
+      val nodes = nodes0.localCheckpoint()
+      val oldE = edgesOf(ring).localCheckpoint()
+      val newE = edgesOf(ring :+ ((2, 1))).localCheckpoint()
+      val prev = LinkGraph.pageRank(nodes, "id", oldE, iters = 4).localCheckpoint()
+      def delta() = LinkGraph.pageRankDelta(nodes, "id", newE, nodes, oldE, prev, iters = 4)
+      val got = delta()
+      val integral = ids.head.isInstanceOf[Long]
+      assert(localRoute(got) === integral, s"$ids: local route iff integral ids")
+      val rows = got.collect().map(r => (r.get(0), r.getLong(1), r.getBoolean(2)))
+      val full = LinkGraph.pageRank(nodes, "id", newE, iters = 4).collect()
+        .map(r => r.get(0) -> r.getLong(1)).toMap
+      assert(rows.map(r => r._1 -> r._2).toMap === full, s"$ids: rank equality")
+      assert(rows.length === ids.length, s"$ids: one row per node")
+      assert(rows.filter(_._3).map(_._1).toSet === ids.take(3).toSet, s"$ids: touched set")
+      assert(sortedRows(got) === distributed(spark)(sortedRows(delta())), s"$ids")
+    }
+    val sIds = Seq("7", "007", "x", "a", "b", "c")
+    run(sIds, sIds.toDF("id"),
+      _.map { case (a, b) => (sIds(a), sIds(b)) }.toDF("src", "dst"))
+    val dIds = Seq(1.0, 1.5, 2.0, 3.0, 3.5, 4.0)
+    run(dIds, dIds.toDF("id"),
+      _.map { case (a, b) => (dIds(a), dIds(b)) }.toDF("src", "dst"))
+    val lIds = Seq(7L, 8L, 9L, 10L, 11L, 12L)
+    run(lIds, lIds.toDF("id"),
+      _.map { case (a, b) => (lIds(a), lIds(b)) }.toDF("src", "dst"))
   }
 }

@@ -1,7 +1,30 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.GraftSparkSpec
+
+/** Route helpers shared by the graph fast-path specs. */
+object LinkGraphSpec {
+  /** Runs `f` with the shared row cap of [[Widen.collectSmall]] at 0,
+    * so every graph fast path takes its distributed route.
+    */
+  def distributed[T](spark: SparkSession)(f: => T): T = {
+    spark.conf.set("spark.graft.graph.localEdgeLimit", "0")
+    try f finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
+  }
+
+  /** True iff `df` came from a driver-local route: those build their
+    * output from a driver-side Seq (a LocalRelation), while the
+    * distributed routes end in checkpointed frames. Meaningful only
+    * when the inputs are checkpointed too.
+    */
+  def localRoute(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst { case _: LocalRelation => () }.isDefined
+
+  def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+}
 
 /** PageRank fixed-point power iteration: exact equality against an
   * independent driver-side BigInt recompute (no tolerance — the
@@ -12,6 +35,7 @@ import graft.GraftSparkSpec
   */
 class LinkGraphSpec extends GraftSparkSpec {
   import spark.implicits._
+  import LinkGraphSpec._
 
   /** Independent reference: adjacency loops over BigInt — shares no
     * arithmetic shape with the operator's DIV/MOD split form. `seeds`
@@ -197,5 +221,72 @@ class LinkGraphSpec extends GraftSparkSpec {
       LinkGraph.pageRank(Seq(1L).toDF("id"), "id",
         Seq((1L, 1L)).toDF("src", "dst"), iters = -1)
     }
+  }
+
+  test("row cap 0 forces every LinkGraph fast path distributed, same output") {
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 3L), (3L, 0L), (3L, 4L),
+      (4L, 4L), (4L, 2L)).toDF("src", "dst").localCheckpoint()
+    val nodes = (0L to 4L).toDF("id").localCheckpoint()
+    val seeds = Seq(0L).toDF("id").localCheckpoint()
+    val routed = Seq[(String, () => DataFrame)](
+      "triangleCounts" -> (() => LinkGraph.triangleCounts(edges)),
+      "pageRank" -> (() => LinkGraph.pageRank(nodes, "id", edges, iters = 4)),
+      "personalizedPageRank" -> (() =>
+        LinkGraph.personalizedPageRank(nodes, "id", edges, seeds, iters = 4)))
+    for ((name, run) <- routed) {
+      val local = run()
+      assert(localRoute(local), s"$name: integral ids must take the local route")
+      val dist = distributed(spark)(run())
+      assert(!localRoute(dist), s"$name: row cap 0 must take the distributed route")
+      assert(sortedRows(dist) === sortedRows(local), name)
+    }
+    // clusteringCoeff checkpoints its output on both routes; its
+    // triangle step is the routed part
+    assert(sortedRows(distributed(spark)(LinkGraph.clusteringCoeff(edges))) ===
+      sortedRows(LinkGraph.clusteringCoeff(edges)))
+  }
+
+  // "007" beside "7": a cast to long would merge them (and "x" would
+  // not cast at all); 2.5 would fold into 2.0 and 1.5 into 1.0
+  private def offLocalRoute(name: String)(f: => DataFrame): Seq[String] = {
+    val df = f
+    assert(!localRoute(df), s"$name: non-integral ids must not take the local route")
+    val got = sortedRows(df)
+    assert(got === distributed(spark)(sortedRows(f)), s"$name: equals the distributed output")
+    got
+  }
+
+  /** pageRank over `ids` (edges by position) against the BigInt reference. */
+  private def rankByPosition(ids: Seq[Any], nodes: DataFrame, edges: DataFrame): Unit = {
+    val edgeIx = Seq((0L, 1L), (1L, 2L), (2L, 0L), (0L, 2L))
+    val (n, e) = (nodes.localCheckpoint(), edges.localCheckpoint())
+    offLocalRoute(s"pageRank $ids")(LinkGraph.pageRank(n, "id", e, iters = 4))
+    val got = LinkGraph.pageRank(n, "id", e, iters = 4).collect()
+      .map(r => ids.indexOf(r.get(0)).toLong -> r.getLong(1))
+    assert(got.length === ids.length, s"$ids: one row per node")
+    assert(got.toMap === reference(Seq(0L, 1L, 2L), edgeIx, 4), s"$ids")
+  }
+  private val ixEdges = Seq((0, 1), (1, 2), (2, 0), (0, 2))
+
+  test("string ids stay off the local route and match the distributed output") {
+    val edges = Seq(("7", "007"), ("007", "x"), ("x", "7"), ("x", "y"), ("y", "7"))
+      .toDF("src", "dst").localCheckpoint()
+    offLocalRoute("triangleCounts")(LinkGraph.triangleCounts(edges))
+    assert(LinkGraph.triangleCounts(edges).as[(String, Long)].collect().toMap ===
+      Map("7" -> 2L, "x" -> 2L, "007" -> 1L, "y" -> 1L))
+    val ids = Seq("7", "007", "x")
+    rankByPosition(ids, ids.toDF("id"),
+      ixEdges.map { case (a, b) => (ids(a), ids(b)) }.toDF("src", "dst"))
+  }
+
+  test("fractional ids stay off the local route and match the distributed output") {
+    val edges = Seq((1.0, 2.0), (2.0, 2.5), (2.5, 1.0), (2.0, 3.0), (3.0, 1.0))
+      .toDF("src", "dst").localCheckpoint()
+    offLocalRoute("triangleCounts")(LinkGraph.triangleCounts(edges))
+    assert(LinkGraph.triangleCounts(edges).as[(Double, Long)].collect().toMap ===
+      Map(1.0 -> 2L, 2.0 -> 2L, 2.5 -> 1L, 3.0 -> 1L))
+    val ids = Seq(1.0, 1.5, 2.0)
+    rankByPosition(ids, ids.toDF("id"),
+      ixEdges.map { case (a, b) => (ids(a), ids(b)) }.toDF("src", "dst"))
   }
 }

@@ -136,6 +136,28 @@ class SpanDedupSpec extends GraftSparkSpec {
     assert(e.getMessage.contains("maxEvalWindows"))
   }
 
+  test("eval-window bound is probed before anything is checkpointed") {
+    // one eval doc of 10 tokens = 3 distinct 8-windows; a budget of 2
+    // is one window short. The probe must fail with the contract text
+    // and leave no checkpointed (persisted) eval frame behind.
+    val docs = Seq(1L -> block).toDF("doc_id", "text")
+    val evals = Seq((1L, s"$block nu xi")).toDF("eval_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      SpanDedup.contaminationReport(docs, "doc_id", "text", evals, "eval_id", "text",
+        k = 8, maxEvalWindows = 2)
+    }
+    assert(e.getMessage === "requirement failed: contaminationReport: eval corpus " +
+      "has more than 2 distinct (doc, window) pairs — the eval side broadcasts; " +
+      "raise maxEvalWindows only deliberately")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "nothing may be materialized before the bound is checked")
+    // exactly at the bound passes
+    val ok = SpanDedup.contaminationReport(docs, "doc_id", "text", evals, "eval_id", "text",
+      k = 8, maxEvalWindows = 3).collect()
+    assert(ok.map(_.getAs[Long]("n_windows")).toSeq === Seq(3L))
+  }
+
   test("contamination dashboard: per-benchmark metrics + trend delta") {
     // prev corpus is clean; cur corpus leaks benchA's probe into two
     // docs; benchB is the negative control (appears nowhere)

@@ -73,4 +73,17 @@ class TfIdfSpec extends GraftSparkSpec {
         .sortBy(t => (t._1, t._4)).toSeq
     assert(run(df1) === run(df7))
   }
+
+  test("a probe set over Ann.MaxQueries fails fast, before the model is built") {
+    val docs = spark.range(graft.vector.Ann.MaxQueries + 1L)
+      .select(col("id").as("doc_id"), lit("alpha beta").as("text"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      TfIdf.cosineTopK(docs, "doc_id", "text", lit(true), k = 3)
+    }
+    assert(e.getMessage.startsWith(
+      "TfIdf.cosineTopK: query frame exceeds maxQueries=100000 rows"), e.getMessage)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the sparse model must not be checkpointed before the bound holds")
+  }
 }

@@ -339,10 +339,11 @@ class GraphAnnSpec extends GraftSparkSpec {
   }
 
   test("driver-local walk equals the distributed walk exactly (flat + hier)") {
-    // round-16 ADVICE: the localWalkLimit fast path captures every
-    // small fixture, so the distributed baseWalk/searchTopKHier would
-    // otherwise lose automated coverage — force it with limit=0 and
-    // pin exact equality (ids, cosines, ranks) against the local path.
+    // round-16 ADVICE: the local-walk fast path captures every small
+    // fixture, so the distributed baseWalk/searchTopKHier would
+    // otherwise lose automated coverage — force it with the shared row
+    // cap at 0 and pin exact equality (ids, cosines, ranks) against
+    // the local path.
     val (cor, qs, centroids) = decoyFixture
     val (edges, entries) = GraphAnn.build(
       cor, "vec_id", "embedding", centroids, m = 4, replicas = 2)
@@ -356,18 +357,39 @@ class GraphAnnSpec extends GraftSparkSpec {
       qs, "vec_id", "embedding", centroids, edges, entries, cg,
       k = 5, entryProbe = 4, cellHops = 4, cellBeam = 4, hops = 3, beam = 8))
     val (localFlat, localHier) = (flat(), hier())
-    spark.conf.set("spark.graft.ann.localWalkLimit", "0")
+    spark.conf.set("spark.graft.graph.localEdgeLimit", "0")
     try {
       assert(flat() === localFlat, "distributed flat walk must equal local")
       assert(hier() === localHier, "distributed hier walk must equal local")
-    } finally spark.conf.unset("spark.graft.ann.localWalkLimit")
-    // the byte guard (localWalkMaxBytes) must route to the SAME
+    } finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
+    // the shared byte guard (widen.maxBytes) must route to the SAME
     // distributed path: equality again with a 1-byte budget
-    spark.conf.set("spark.graft.ann.localWalkMaxBytes", "1")
+    spark.conf.set("spark.graft.widen.maxBytes", "1")
     try {
       assert(flat() === localFlat, "byte-guard fallback must equal local")
       assert(hier() === localHier, "byte-guard fallback (hier) must equal local")
-    } finally spark.conf.unset("spark.graft.ann.localWalkMaxBytes")
+    } finally spark.conf.unset("spark.graft.widen.maxBytes")
+  }
+
+  test("null vectors and null vector elements fall back to the distributed walk") {
+    // the local walk holds no nulls; a null vector (whose norm is null
+    // too) or a null element must route the search to the distributed
+    // walk, whose SQL three-valued scoring the output must then equal
+    val (cor0, qs, centroids) = decoyFixture
+    val (edges, entries) = GraphAnn.build(
+      cor0, "vec_id", "embedding", centroids, m = 4, replicas = 2)
+    val cor = cor0.select(col("vec_id"),
+      when(col("vec_id") % 5 === 0L, lit(null))
+        .when(col("vec_id") % 7 === 3L,
+          transform(col("embedding"), (x, i) => when(i === 0, lit(null)).otherwise(x)))
+        .otherwise(col("embedding")).as("embedding"))
+    def flat() = GraphAnn.searchTopK(cor, "vec_id", "embedding",
+      qs, "vec_id", "embedding", centroids, edges, entries,
+      k = 30, nprobe = 2, hops = 3, beam = 8).collect().map(_.toString).sorted.toSeq
+    val got = flat()
+    spark.conf.set("spark.graft.graph.localEdgeLimit", "0")
+    try assert(got === flat(), "null payloads must serve the distributed walk")
+    finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
   }
 
   test("hierarchical assignment: full fan IS the flat rank; small fan keeps fidelity") {
