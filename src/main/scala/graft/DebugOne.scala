@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 
 /** Debug runner: run named `SparkEntry.queries` against an sf dir and
   * print row counts, with the full stack on failure — `Verify` swallows
@@ -11,20 +11,11 @@ object DebugOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q6_parse")
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    val selected = SparkEntry.selectQueries(names, "DebugOne")
+    val spark = LocalSpark.session("local[4]", 4, "ERROR")
+    selected.foreach { case (n, fn) =>
       try {
-        val c = SparkEntry.queries(n)(spark, sfDir).count()
+        val c = fn(spark, sfDir).count()
         println(s"OK $n rows=$c")
       } catch { case e: Throwable =>
         println(s"FAIL $n: ${e.getClass.getName}: ${e.getMessage}")

@@ -2,11 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.rules.{GraftConfig, RuleEngine, ToolSignature}
 import graft.sources.LogSources
+import graft.util.LocalSpark
 
 /** Dump the engine state after the full pipeline over the parity fixture
   * logs, in the exact row/column/format shape `tools/ref_golden.py`
@@ -17,17 +18,8 @@ import graft.sources.LogSources
 object ParityDump {
   def main(args: Array[String]): Unit = {
     val Array(logDir, outCsv) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = LocalSpark.session(s"local[$cpus]", cpus, "WARN")
 
     val config = GraftConfig.default.copy(
       toolSignatures = Seq(ToolSignature(
@@ -65,13 +57,14 @@ object ParityDump {
       body.length
     }
 
-    def dump(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-      val out = df
-        .withColumn("risk_score", format_string("%.4f", col("risk_score")))
-        .select(cols.map(c => col(c).cast("string")): _*)
-        .collect()
-        .map(r => cols.indices.map(i => if (r.isNullAt(i)) "" else r.getString(i)).toSeq)
-        .toSeq
+    // every column as its string cast, null as the empty field
+    def fields(df: DataFrame, names: Seq[String]): Seq[Seq[String]] =
+      df.select(names.map(c => col(c).cast("string")): _*).collect()
+        .map(r => names.indices.map(i => if (r.isNullAt(i)) "" else r.getString(i))).toSeq
+
+    def dump(df: DataFrame, path: String): Unit = {
+      val out = fields(
+        df.withColumn("risk_score", format_string("%.4f", col("risk_score"))), cols)
       val n = writeCsv(cols, out, path)
       println(s"[parity_dump] wrote $n rows to $path")
     }
@@ -99,13 +92,8 @@ object ParityDump {
       Pipeline.Options(timeOffsetSeconds = -3600))
     val offCols = Seq("source", "timestamp", "ip", "request_uri", "utc_str",
       "cluster", "request_count")
-    val offRows = shifted
-      .withColumn("utc_str",
-        concat(date_format(col("utc_timestamp"), "yyyy-MM-dd HH:mm:ss"), lit("+00:00")))
-      .select(offCols.map(c => col(c).cast("string")): _*)
-      .collect()
-      .map(r => offCols.indices.map(i => if (r.isNullAt(i)) "" else r.getString(i)).toSeq)
-      .toSeq
+    val offRows = fields(shifted.withColumn("utc_str",
+      concat(date_format(col("utc_timestamp"), "yyyy-MM-dd HH:mm:ss"), lit("+00:00"))), offCols)
     val nOff = writeCsv(offCols, offRows, outCsv.replace(".csv", "_offset.csv"))
     println(s"[parity_dump] wrote $nOff rows to offset dump")
 

@@ -1,96 +1,44 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.util.{LocalSpark, StageLog}
 
-/** Dev utility (guide §1): run one query at the bench scale and print
-  * per-job wall time + per-stage executor metrics, so a composed
-  * pipeline's cost lands on the sub-action that owns it. Usage:
+/** Dev utility (guide §1): run queries at the bench scale and print
+  * per-job wall time + per-stage executor metrics of the last of
+  * `SPARK_GRAFT_BENCH_PASSES` passes, so a composed pipeline's cost
+  * lands on the sub-action that owns it. Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.ProfileOne q65_curation_pipeline [passes]"
+  *     sbt "runMain graft.ProfileOne q65_curation_pipeline [query ...]"
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
-    val names = args.toSeq
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
+    require(args.nonEmpty, "usage: ProfileOne <query> [query ...]")
+    val selected = SparkEntry.selectQueries(args, "ProfileOne")
+    val passes = Bench.passes
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSpark.session(s"local[$cpus]", cpus, "ERROR")
+    val log = StageLog.attach(spark)
 
-    final case class JobRow(id: Int, desc: String, started: Long,
-        var ended: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
-        var shuffleReadMB: Double = 0, var shuffleWriteMB: Double = 0,
-        var cpuSec: Double = 0, var stageNames: List[String] = Nil)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(js.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("")
-        jobs.put(js.jobId, JobRow(js.jobId, desc, js.time))
-        order.add(js.jobId)
-        js.stageIds.foreach(sid => stageToJob.put(sid, js.jobId))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        val r = jobs.get(je.jobId); if (r != null) r.ended = je.time
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val jid = stageToJob.getOrDefault(sc.stageInfo.stageId, -1)
-        val r = jobs.get(jid)
-        if (r != null) {
-          r.stages += 1
-          r.tasks += sc.stageInfo.numTasks
-          val m = sc.stageInfo.taskMetrics
-          r.shuffleReadMB += m.shuffleReadMetrics.totalBytesRead / 1e6
-          r.shuffleWriteMB += m.shuffleWriteMetrics.bytesWritten / 1e6
-          r.cpuSec += m.executorCpuTime / 1e9
-          val wall = (for {
-            a <- sc.stageInfo.submissionTime; b <- sc.stageInfo.completionTime
-          } yield (b - a) / 1e3).getOrElse(-1.0)
-          val frame = sc.stageInfo.details.linesIterator
-            .find(l => l.contains("graft") && !l.contains("ProfileOne"))
-            .getOrElse("").trim.take(110)
-          r.stageNames ::= f"      stage ${sc.stageInfo.stageId}%5d " +
-            f"$wall%6.2f cpu=${m.executorCpuTime / 1e9}%6.2f " +
-            f"t=${sc.stageInfo.numTasks}%3d ${sc.stageInfo.name.takeWhile(_ != ' ')} $frame"
-        }
-      }
-    })
-
-    for (name <- names) {
-      val fn = SparkEntry.queries(name)
+    for ((name, fn) <- selected) {
       (1 to passes).foreach { p =>
-        jobs.clear(); order.clear(); stageToJob.clear()
         spark.catalog.clearCache(); System.gc()
+        log.reset()
         val t0 = System.nanoTime()
         Bench.force(fn(spark, sfDir))
         val total = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let listener drain
         println(f"\n===== $name pass $p: total $total%.2f s =====")
         if (p == passes) {
           println(f"${"job"}%4s ${"wall_s"}%7s ${"cpu_s"}%7s ${"tasks"}%5s " +
             f"${"shR_MB"}%8s ${"shW_MB"}%8s  first-graft-frame")
-          order.forEach { id =>
-            val r = jobs.get(id)
-            val wall = (r.ended - r.started) / 1e3
-            if (wall >= 0.05) {
-              println(f"${r.id}%4d $wall%7.2f ${r.cpuSec}%7.2f ${r.tasks}%5d " +
-                f"${r.shuffleReadMB}%8.1f ${r.shuffleWriteMB}%8.1f")
-              r.stageNames.reverse.foreach(println)
+          for (j <- log.jobs() if j.wallSec >= 0.05) {
+            val st = j.stages
+            println(f"${j.id}%4d ${j.wallSec}%7.2f ${st.map(_.cpuSec).sum}%7.2f " +
+              f"${st.map(_.tasks).sum}%5d ${st.map(_.shuffleReadBytes).sum / 1e6}%8.1f " +
+              f"${st.map(_.shuffleWriteBytes).sum / 1e6}%8.1f")
+            st.foreach { s =>
+              val frame = s.graftFrames.find(!_.contains("ProfileOne")).getOrElse("").take(110)
+              println(f"      stage ${s.id}%5d ${s.wallSec}%6.2f cpu=${s.cpuSec}%6.2f " +
+                f"t=${s.tasks}%3d ${s.name} $frame")
             }
           }
         }

@@ -1,18 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{StorageLayout, TableLog}
+import graft.util.{LocalSpark, StageLog}
 
 /** Scale evidence runner (round-3 VERDICT #7): one order of magnitude
   * above the per-round bench, plus a deliberately hot-keyed corpus.
   *
-  * Phase 0 materializes an sf≈1 dataset under `GRAFT_SCALE_DIR` by
-  * replicating the sf0.1 parquet with key offsets (replica r shifts
-  * event/user/doc/vec ids into its own range, so key cardinality grows
-  * 10x with the data — reading the result back from parquet keeps
-  * generation cost out of the timings and the scans realistic).
+  * Phase 0 materializes an sf≈1 dataset under `GRAFT_SCALE_DIR` with
+  * [[ScaleSuite.replicateCorpus]] (replica r shifts event/user/doc/vec
+  * ids into its own range, so key cardinality grows 10x with the data —
+  * reading the result back from parquet keeps generation cost out of
+  * the timings and the scans realistic).
   *
   * Phase 1 times the headline operator families at that scale.
   *
@@ -28,37 +29,19 @@ import graft.operators.{StorageLayout, TableLog}
   */
 object ScaleBench {
 
-  /** (order-insensitive content hash, row count) — the hash makes
-    * same-semantics duels (monolithic vs chunked) assertable without a
-    * second materialization of either side.
+  /** Reports the longest single task of each measured window.
+    * Wall-clock on one box under-reports stragglers (idle cores absorb
+    * them); on a real cluster every other executor WAITS on the longest
+    * task, so max-task is the metric a hot key actually moves.
     */
-  private def force(df: DataFrame): (Long, Long) = {
-    val h = xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
-    val r = df.select(h.as("_h"))
-      .agg(expr("bit_xor(_h)").as("_x"), count(lit(1)).as("_n")).collect()(0)
-    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
-  }
-
-  /** Longest single task in the measured window. Wall-clock on one box
-    * under-reports stragglers (idle cores absorb them); on a real
-    * cluster every other executor WAITS on the longest task, so
-    * max-task is the metric a hot key actually moves.
-    */
-  private val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private var sc: org.apache.spark.SparkContext = _
+  private var log: StageLog = _
 
   private def timed(name: String, df: => DataFrame): (Long, Long) = {
-    // drain the async listener bus around the measurement window: a
-    // late task-end event would be missed here and mis-attributed to
-    // the NEXT workload after the reset
-    org.apache.spark.GraftListenerInterop.waitUntilListenerBusEmpty(sc)
-    maxTaskMs.set(0)
+    log.reset()
     val t0 = System.nanoTime()
-    val (xor, rows) = force(df)
+    val (xor, rows) = Bench.force(df)
     val sec = (System.nanoTime() - t0) / 1e9
-    org.apache.spark.GraftListenerInterop.waitUntilListenerBusEmpty(sc)
-    val mt = maxTaskMs.get() / 1e3
+    val mt = log.maxTaskSec()
     println(f"""{"bench":"scale","workload":"$name","sec":$sec%.2f,"max_task_sec":$mt%.2f,"rows":$rows,"xor":$xor}""")
     (xor, rows)
   }
@@ -66,27 +49,10 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sc = spark.sparkContext
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val d = t.taskInfo.duration
-        var cur = maxTaskMs.get()
-        while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-      }
-    })
+    val spark = LocalSpark.session(s"local[$cpus]", cpus, "WARN")
+    log = StageLog.attach(spark)
 
     // SPARK_GRAFT_SKEW_ONLY=1: jump straight to the hot-key duels
     // (phase 2) — the sf~1 corpus phases don't change when iterating on
@@ -108,49 +74,18 @@ object ScaleBench {
             "of any kind either express or implied including merchantability")).as("text"))
 
     // ---- phase 0: materialize the scaled dataset ----
-    val rep = explode(sequence(lit(0L), lit(replicas - 1L))).as("_r")
     if (!skewOnly && !advOnly) {
 
-    val events = spark.read.parquet(s"$baseDir/events.parquet")
-      .select(col("*"), rep)
-      .select(
-        (col("event_id") + col("_r") * lit(1000000000L)).as("event_id"),
-        col("ts"),
-        (col("user_id") + col("_r") * lit(1000000L)).as("user_id"),
-        col("event_type"), col("value"))
-    events.write.mode("overwrite").parquet(s"$outDir/events")
-
-    // replica tag appended to the text: replicas are near-dups of their
-    // original (realistic for web corpora), not byte-identical copies
-    val docs = spark.read.parquet(s"$baseDir/documents.parquet")
-      .select(col("*"), rep)
-      .select(
-        (col("doc_id") + col("_r") * lit(1000000L)).as("doc_id"),
-        concat(col("text"), lit(" replica"), col("_r")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    docs.write.mode("overwrite").parquet(s"$outDir/documents")
-
-    val embBase = spark.read.parquet(s"$baseDir/embeddings.parquet")
-    val emb = embBase
-      .select(col("*"), rep)
-      .select(
-        (col("vec_id") + col("_r") * lit(1000000L)).as("vec_id"),
-        // small per-replica rotation of the first component keeps the
-        // replicas distinct vectors while preserving the distribution
-        transform(col("embedding"),
-          (x, i) => when(i === 0, x + col("_r").cast("float") * lit(0.001f))
-            .otherwise(x)).as("embedding"))
-    emb.write.mode("overwrite").parquet(s"$outDir/embeddings")
-
+    ScaleSuite.replicateCorpus(spark, baseDir, outDir, replicas)
     val ev = graft.SparkEntry.normalizeEventTs(
-      spark.read.parquet(s"$outDir/events"))
+      spark.read.parquet(s"$outDir/events.parquet"))
     val logs = ev.select(
       col("event_id"),
       col("event_type").as("source"),
       col("user_id").cast("string").as("ip"),
       col("ts").as("utc_timestamp"))
-    val sdocs = spark.read.parquet(s"$outDir/documents")
-    val semb = spark.read.parquet(s"$outDir/embeddings")
+    val sdocs = spark.read.parquet(s"$outDir/documents.parquet")
+    val semb = spark.read.parquet(s"$outDir/embeddings.parquet")
     println(s"""{"bench":"scale","workload":"generate","events":${ev.count()},""" +
       s""""documents":${sdocs.count()},"embeddings":${semb.count()},"replicas":$replicas}""")
 
@@ -575,8 +510,9 @@ object ScaleBench {
         .write.mode("overwrite").parquet(s"$layoutBase/scatter")
       // decoded-rows-aware timer: on one box with 32 idle cores the
       // wall delta of a skipped scan is noise — the cluster-relevant
-      // quantity is rows DECODED (scan IO), reported alongside
-      def scanRows(df: DataFrame): Long = {
+      // quantity is rows DECODED (scan IO), reported alongside, and
+      // with `files` also the number of files the scans planned
+      def scanMetric(df: DataFrame, metric: String): Long = {
         import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
         import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
         def scans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
@@ -587,18 +523,19 @@ object ScaleBench {
           case f: FileSourceScanExec => Seq(f)
           case other => other.children.flatMap(scans)
         }
-        scans(df.queryExecution.executedPlan)
-          .map(_.metrics("numOutputRows").value).sum
+        scans(df.queryExecution.executedPlan).map(_.metrics(metric).value).sum
       }
-      def timedScan(name: String, mk: => DataFrame): Long = {
+      def timedScan(name: String, mk: => DataFrame, files: Boolean = false): Long = {
         val warm = mk; warm.collect()          // codegen/JIT warm pass
         val fresh = mk
         val t0 = System.nanoTime()
         fresh.collect()
         val sec = (System.nanoTime() - t0) / 1e9
-        val decoded = scanRows(fresh)
-        val x = force(mk)._1
-        println(f"""{"bench":"scale","workload":"$name","sec":$sec%.2f,"rows_decoded":$decoded,"xor":$x}""")
+        val decoded = scanMetric(fresh, "numOutputRows")
+        val planned =
+          if (files) s""","files_planned":${scanMetric(fresh, "numFiles")}""" else ""
+        val x = Bench.force(mk)._1
+        println(f"""{"bench":"scale","workload":"$name","sec":$sec%.2f,"rows_decoded":$decoded$planned,"xor":$x}""")
         x
       }
       def bandId(path: String) = spark.read.parquet(path)
@@ -626,37 +563,13 @@ object ScaleBench {
         TableLog.create(spark, tlPath, src.repartition(64, col("b")))
         TableLog.optimizeRange(spark, tlPath, "id", numFiles = 64)
         println(f"""{"bench":"scale","workload":"tablelog_create_optimize","sec":${(System.nanoTime() - t1) / 1e9}%.2f}""")
-        def scanFiles(df: DataFrame): Long = {
-          import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-          import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-          def scans(pl: SparkPlan): Seq[FileSourceScanExec] = pl match {
-            case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-            case q: QueryStageExec => scans(q.plan)
-            case f: FileSourceScanExec => Seq(f)
-            case other => other.children.flatMap(scans)
-          }
-          scans(df.queryExecution.executedPlan)
-            .map(_.metrics("numFiles").value).sum
-        }
-        def timedBand(name: String, mk: => DataFrame): Long = {
-          val warm = mk; warm.collect()
-          val fresh = mk
-          val t0 = System.nanoTime()
-          fresh.collect()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val decoded = scanRows(fresh)
-          val files = scanFiles(fresh)
-          val x = force(mk)._1
-          println(f"""{"bench":"scale","workload":"$name","sec":$sec%.2f,"rows_decoded":$decoded,"files_planned":$files,"xor":$x}""")
-          x
-        }
         def agg(df: DataFrame) =
           df.agg(sum(length(col("p"))).as("s"), count(lit(1)).as("c"))
-        val mXor = timedBand("manifest_band_tablelog",
-          agg(TableLog.readBand(spark, tlPath, "id", n / 2, n / 2 + n / 16 - 1)))
-        val fXor = timedBand("footer_band_tablelog",
+        val mXor = timedScan("manifest_band_tablelog",
+          agg(TableLog.readBand(spark, tlPath, "id", n / 2, n / 2 + n / 16 - 1)), files = true)
+        val fXor = timedScan("footer_band_tablelog",
           agg(TableLog.read(spark, tlPath)
-            .filter(col("id") >= n / 2 && col("id") < n / 2 + n / 16)))
+            .filter(col("id") >= n / 2 && col("id") < n / 2 + n / 16)), files = true)
         if (mXor != fXor)
           throw new IllegalStateException("manifest-pruning duel diverged")
       }
@@ -691,16 +604,10 @@ object ScaleBench {
     // in-memory sort is still cheaper than the chunked path's extra
     // shuffle+join.
     if (!advOnly) {
-    val skewReplicas = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPLICAS", "100").toLong
-    val skRep = explode(sequence(lit(0L), lit(skewReplicas - 1L))).as("_r")
-    val skBase = graft.SparkEntry.normalizeEventTs(
-        spark.read.parquet(s"$baseDir/events.parquet"))
-      .select(col("*"), skRep)
-      .select(
-        (col("event_id") + col("_r") * lit(1000000000L)).as("event_id"),
-        col("ts").as("utc_timestamp"),
-        (col("user_id") + col("_r") * lit(1000000L)).as("user_id"),
-        col("event_type"))
+    val skewReplicas = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPLICAS", "100").toInt
+    val skBase = ScaleSuite.replicatedEvents(graft.SparkEntry.normalizeEventTs(
+        spark.read.parquet(s"$baseDir/events.parquet")), skewReplicas)
+      .withColumnRenamed("ts", "utc_timestamp")
     val skewed = skBase.select(
       col("event_id"),
       when(col("event_id") % 2 === 0, lit("weblog")).otherwise(col("event_type")).as("source"),

@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.LocalSpark
+
 /** Full-suite scale run (round-3 VERDICT #7): materialize a COMPLETE
-  * sf≈1 table set (every table the queries read, replicated with key
-  * offsets like [[ScaleBench]] — fact keys shift per replica so key
-  * cardinality grows with the data; dimension tables pass through) and
-  * run the whole `SparkEntry.queries` suite against it with Bench's
-  * warmup + force + timing loop.
+  * sf≈1 table set under `GRAFT_SCALE_DIR` (every table the queries
+  * read, replicated with key offsets — fact keys shift per replica so
+  * key cardinality grows with the data; dimension tables pass through)
+  * and run the whole `SparkEntry.queries` suite against it with
+  * Bench's warmup and timed loop (`SPARK_GRAFT_BENCH_ONLY`,
+  * `SPARK_GRAFT_BENCH_PASSES`).
   *
   * The per-query times land next to the sf0.1 BENCH numbers in
   * THROUGHPUT.md as a scaling table: a query whose time grows ~10x the
@@ -22,70 +25,34 @@ object ScaleSuite {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val outDir = sys.env.getOrElse("GRAFT_SCALE_SUITE_DIR", "/tmp/graft_scale_suite")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val outDir = sys.env.getOrElse("GRAFT_SCALE_DIR", "/tmp/graft_scale")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "10").toInt
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(s"local[$cpus]", cpus, "WARN")
 
     // ---- phase 0: full replicated table set ----
-    val rep = explode(sequence(lit(0L), lit(replicas - 1L))).as("_r")
-    def write(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-
-    write(spark.read.parquet(s"$baseDir/events.parquet")
-      .select(col("*"), rep)
-      .select(
-        (col("event_id") + col("_r") * lit(1000000000L)).as("event_id"),
-        col("ts"),
-        (col("user_id") + col("_r") * lit(1000000L)).as("user_id"),
-        col("event_type"), col("value")), "events")
-
-    write(spark.read.parquet(s"$baseDir/documents.parquet")
-      .select(col("*"), rep)
-      .select(
-        (col("doc_id") + col("_r") * lit(1000000L)).as("doc_id"),
-        concat(col("text"), lit(" replica"), col("_r")).as("text"),
-        col("lang"), col("source"), col("n_chars")), "documents")
-
-    write(spark.read.parquet(s"$baseDir/embeddings.parquet")
-      .select(col("*"), rep)
-      .select(
-        (col("vec_id") + col("_r") * lit(1000000L)).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => when(i === 0, x + col("_r").cast("float") * lit(0.001f))
-            .otherwise(x)).as("embedding"),
-        col("label")), "embeddings")
-
+    replicateCorpus(spark, baseDir, outDir, replicas)
+    val rep = replica(replicas)
     // fact tables for the TPC-H-ish queries: shift the join keys in
     // LOCKSTEP on both sides so q3's lineitem->orders->customer chain
     // matches within each replica
     write(spark.read.parquet(s"$baseDir/lineitem.parquet")
       .select(col("*"), rep)
       .withColumn("l_orderkey", col("l_orderkey") + col("_r") * lit(100000000L))
-      .drop("_r"), "lineitem")
+      .drop("_r"), outDir, "lineitem")
     write(spark.read.parquet(s"$baseDir/orders.parquet")
       .select(col("*"), rep)
       .withColumn("o_orderkey", col("o_orderkey") + col("_r") * lit(100000000L))
       .withColumn("o_custkey", col("o_custkey") + col("_r") * lit(10000000L))
-      .drop("_r"), "orders")
+      .drop("_r"), outDir, "orders")
     write(spark.read.parquet(s"$baseDir/customer.parquet")
       .select(col("*"), rep)
       .withColumn("c_custkey", col("c_custkey") + col("_r") * lit(10000000L))
-      .drop("_r"), "customer")
+      .drop("_r"), outDir, "customer")
 
     // dimension tables pass through unchanged
     Seq("region", "nation", "supplier", "part").foreach { t =>
-      write(spark.read.parquet(s"$baseDir/$t.parquet"), t)
+      write(spark.read.parquet(s"$baseDir/$t.parquet"), outDir, t)
     }
     val nEvents = spark.read.parquet(s"$outDir/events.parquet").count()
     val nLine = spark.read.parquet(s"$outDir/lineitem.parquet").count()
@@ -93,36 +60,60 @@ object ScaleSuite {
 
     // ---- phase 1: warmup (Bench's shared recipe) then the timed suite ----
     Bench.warmAll(spark, sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001"))
-    // SPARK_GRAFT_SUITE_ONLY=q133_ann_graph,... restricts the timed
-    // set for A/B scaling sessions (the Bench ONLY contract, same
-    // fail-fast on typos)
-    val only = sys.env.get("SPARK_GRAFT_SUITE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_SUITE_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { Bench.force(fn(spark, outDir)); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(s"SCALE-SUITE FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-            false
-        }
-      if (!ok) failed += name
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val results = Bench.timeSuite(spark, outDir)
+    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val failedJson = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
-    println(s"""{"metric":"scale_suite_total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"replicas":$replicas}""")
+    println(s"""{"metric":"scale_suite_total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"passes":${Bench.passes},"replicas":$replicas}""")
     spark.stop()
+  }
+
+  private def replica(replicas: Int): Column =
+    explode(sequence(lit(0L), lit(replicas - 1L))).as("_r")
+
+  private def write(df: DataFrame, outDir: String, name: String): Unit =
+    df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+
+  /** `events` replicated: replica r shifts event and user ids into its
+    * own range, so key cardinality grows with the data. */
+  def replicatedEvents(events: DataFrame, replicas: Int): DataFrame =
+    events.select(col("*"), replica(replicas))
+      .select(
+        (col("event_id") + col("_r") * lit(1000000000L)).as("event_id"),
+        col("ts"),
+        (col("user_id") + col("_r") * lit(1000000L)).as("user_id"),
+        col("event_type"), col("value"))
+
+  /** Replicates the corpus tables (events, documents, embeddings) of
+    * `baseDir` into `outDir/<table>.parquet`: replica r shifts the
+    * event/user/doc/vec ids into its own range, so key cardinality grows
+    * with the data. Shared with [[ScaleBench]]'s phase 0.
+    */
+  def replicateCorpus(spark: SparkSession, baseDir: String, outDir: String,
+      replicas: Int): Unit = {
+    val rep = replica(replicas)
+    write(replicatedEvents(spark.read.parquet(s"$baseDir/events.parquet"), replicas),
+      outDir, "events")
+
+    // replica tag appended to the text: replicas are near-dups of their
+    // original (realistic for web corpora), not byte-identical copies
+    write(spark.read.parquet(s"$baseDir/documents.parquet")
+      .select(col("*"), rep)
+      .select(
+        (col("doc_id") + col("_r") * lit(1000000L)).as("doc_id"),
+        concat(col("text"), lit(" replica"), col("_r")).as("text"),
+        col("lang"), col("source"), col("n_chars")), outDir, "documents")
+
+    write(spark.read.parquet(s"$baseDir/embeddings.parquet")
+      .select(col("*"), rep)
+      .select(
+        (col("vec_id") + col("_r") * lit(1000000L)).as("vec_id"),
+        // small per-replica rotation of the first component keeps the
+        // replicas distinct vectors while preserving the distribution
+        transform(col("embedding"),
+          (x, i) => when(i === 0, x + col("_r").cast("float") * lit(0.001f))
+            .otherwise(x)).as("embedding"),
+        col("label")), outDir, "embeddings")
   }
 }

@@ -1,16 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 object SmokeEntry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session("local[8]", 8, "WARN")
     val df = SparkEntry.entry(spark)
     println("ENTRY ROWS = " + df.count())
     df.show(10, truncate = false)

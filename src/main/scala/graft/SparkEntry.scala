@@ -110,6 +110,21 @@ object SparkEntry {
     graft.registry.SearchQueries.queries ++
     graft.registry.SourceQueries.queries
 
+  /** `queries` in name order (so the queries that absorb residual JIT
+    * warmup stay the same run to run), only the named ones when `names`
+    * is non-empty. Unknown names fail fast, citing `source`: a typo
+    * would otherwise silently shrink a run to nothing.
+    */
+  def selectQueries(names: Iterable[String], source: String)
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val only = names.toSet
+    val unknown = only -- all.keySet
+    require(unknown.isEmpty,
+      s"$source names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (name, _) => only.isEmpty || only(name) }
+  }
+
   /** q130's static oracle: the q112 fixture rebuilt in SQL (repeat /
     * base64(unhex(md5)) / passthrough — all three arms verified
     * byte-identical across engines), the char histogram, and the

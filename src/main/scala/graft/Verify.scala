@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.util.LocalSpark
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,25 +11,12 @@ object Verify {
     // the driver always passes exactly two args). Unknown names fail
     // fast — the Bench SPARK_GRAFT_BENCH_ONLY discipline.
     val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"Verify: unknown queries: ${unknown.mkString(", ")}")
+    val queries = SparkEntry.selectQueries(only, "Verify")
     def selected(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
-      // type for; read as long and convert in SparkEntry.eventsTable
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = LocalSpark.session(s"local[$cpus]", cpus, "WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -2,31 +2,33 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.util.LocalSpark
 
-/** Dumps `explain("formatted")` for every SparkEntry query to one file
-  * (arg 1, default /tmp/graft_plans.txt) and prints a red-flag summary:
-  * cartesian products, missing parquet filter pushdown on filter-shaped
-  * queries, and per-plan exchange counts. The curated commentary lives
-  * in PLANS.md; this tool regenerates the raw evidence.
+/** Plan review for `SparkEntry.queries` at `SPARK_GRAFT_SF_DIR`
+  * (default sf0.01). Prints a red-flag summary per plan: cartesian
+  * products, broadcast nested-loop joins, exchange and codegen-span
+  * counts. The curated commentary lives in PLANS.md; this tool
+  * regenerates the raw evidence.
+  *
+  * Usage: `runMain graft.cli.ExplainAudit [outFile] [query ...]`. An
+  * argument containing `/` is the plans file; every other argument
+  * names a query, and names restrict the audit to those queries
+  * (unknown names fail fast). The `explain("formatted")` plans go to
+  * the plans file when one is given, to stdout when only names are,
+  * and to /tmp/graft_plans.txt when neither is.
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val out = args.headOption.getOrElse("/tmp/graft_plans.txt")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (paths, names) = args.toSeq.partition(_.contains('/'))
+    val out = paths.headOption.orElse(
+      if (names.isEmpty) Some("/tmp/graft_plans.txt") else None)
+    val selected = graft.SparkEntry.selectQueries(names, "ExplainAudit")
+    val spark = LocalSpark.session("local[4]", 4, "ERROR")
 
     val sb = new StringBuilder
     val summary = new StringBuilder
-    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for ((name, fn) <- selected) {
       val df = fn(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
@@ -41,8 +43,12 @@ object ExplainAudit {
         (if (cartesian) "  !! CARTESIAN" else "") +
         (if (bnlj) "  (bnlj)" else "") + "\n")
     }
-    Files.write(Paths.get(out), sb.toString.getBytes("UTF-8"))
-    println(s"[explain_audit] plans -> $out")
+    out match {
+      case Some(path) =>
+        Files.write(Paths.get(path), sb.toString.getBytes("UTF-8"))
+        println(s"[explain_audit] plans -> $path")
+      case None => print(sb)
+    }
     print(summary)
     spark.stop()
   }

@@ -2,7 +2,6 @@ package graft.cli
 
 import scala.annotation.tailrec
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.Pipeline
@@ -10,6 +9,7 @@ import graft.query.FilterOptions
 import graft.rules.{GraftConfig, RuleEngine}
 import graft.sink.{EmailSink, Renderer}
 import graft.sources.LogSources
+import graft.util.LocalSpark
 
 /** CLI entry point mirroring the reference's argparse surface
   * (reference triage.py:11-224). The CLI *is* the query language: every
@@ -107,18 +107,9 @@ object Triage {
         "with the desired offset instead.")
     require(args.limit >= 0, "--limit must be >= 0 (0 = unbounded)")
 
-    val spark = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-triage")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "WARN",
+      Seq("spark.app.name" -> "graft-triage"))
 
     try {
       val config0 = args.config.map(GraftConfig.load).getOrElse(GraftConfig.default)

@@ -26,8 +26,8 @@ import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
   *
   * Scale posture: this tunes the LOCAL scratch filesystem only —
   * `fs.file.impl` governs `file://` paths; cluster tables live on
-  * hdfs:// / s3:// whose clients never fork. Selected by the graft
-  * session builders via
+  * hdfs:// / s3:// whose clients never fork. Selected by
+  * [[LocalSpark]]'s shared conf via
   * `spark.hadoop.fs.file.impl=graft.util.NoForkLocalFileSystem`.
   */
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {

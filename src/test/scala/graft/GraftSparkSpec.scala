@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.util.LocalSpark
+
 /** Shared local SparkSession for all suites (one per JVM).
   *
   * Parallelism is overridable (GRAFT_TEST_CPUS / GRAFT_TEST_SHUFFLE)
@@ -14,20 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = {
     val cpus = sys.env.getOrElse("GRAFT_TEST_CPUS", "4")
-    val shuffle = sys.env.getOrElse("GRAFT_TEST_SHUFFLE", "4")
-    val s = SparkSession.builder()
-      // local-FS perf: no /bin/chmod forks (graft.util.NoForkLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", "graft.util.NoForkLocalFileSystem")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    val shuffle = sys.env.getOrElse("GRAFT_TEST_SHUFFLE", "4").toInt
+    LocalSpark.session(s"local[$cpus]", shuffle, "WARN", Seq("spark.app.name" -> "graft-test"))
   }
 }
 

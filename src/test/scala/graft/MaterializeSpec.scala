@@ -153,4 +153,40 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     assert(perRelation.size == 2, s"expected the text and csv relations, got $scans")
     assert(perRelation.values.forall(_ == 1), s"scans per relation: $perRelation")
   }
+
+  /** A documents table of `(doc_id, text)` rows in a fresh dir, the
+    * layout `SparkEntry.curationStage4` reads; returns the dir. */
+  private def documentsDir(docs: Seq[(Long, String)]): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_curation").toString
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("curationStage4: guard shut gives the same (doc_id, lang_pred, text) rows") {
+    val prose = Seq(
+      "the quick brown fox jumps over the lazy dog and then it runs into the forest to hide",
+      "<p>a small team of volunteers cleaned the river bank on a sunny day in the spring</p>",
+      "we walked to the market in the morning and bought bread and cheese for the whole week",
+      "she said that the train would be late because of the snow that fell during the night",
+      "der kleine hund spielt mit dem ball im garten und die kinder lachen laut in der sonne",
+      "our pipeline ran a slow hash batch over the logs and it finished after the lunch break")
+    val docs = prose.zipWithIndex.map { case (t, i) => (i.toLong, t) } ++ Seq(
+      (10L, prose.head), // exact duplicate: dedup keeps doc 0
+      (11L, "too short to keep"))
+    val dir = documentsDir(docs)
+    def rows(df: DataFrame) =
+      df.select("doc_id", "lang_pred", "text").collect().map(_.toSeq).toSet
+    val guarded = SparkEntry.curationStage4(spark, dir)
+    val open = unguarded {
+      val df = SparkEntry.curationStage4(spark, dir)
+      (materialized(df.queryExecution.logical), rows(df))
+    }
+    // each side really took its route
+    assert(materialized(guarded.queryExecution.logical))
+    assert(!open._1)
+    val kept = rows(guarded)
+    assert(kept.map(_.head) == Set(0L, 1L, 2L, 3L, 4L), kept)
+    assert(open._2 == kept)
+  }
 }

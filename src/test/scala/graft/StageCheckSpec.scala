@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.GraftListenerInterop
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,20 +17,18 @@ class StageCheckSpec extends GraftSparkSpec {
   import spark.implicits._
 
   /** Jobs started while `body` runs: listener delivery is async, so
-    * poll after the (synchronous) actions return until the count is
-    * stable for one interval.
+    * drain the listener bus after the (synchronous) actions return.
     */
   private def countJobs(body: => Unit): Int = {
     val n = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit = n.incrementAndGet()
     }
+    GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      var last = -1
-      var tries = 0
-      while (n.get != last && tries < 50) { last = n.get; Thread.sleep(200); tries += 1 }
+      GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
       n.get
     } finally spark.sparkContext.removeSparkListener(listener)
   }

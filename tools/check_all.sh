@@ -21,6 +21,12 @@ python3 tools/ref_golden.py /tmp/graft_parity/logs /tmp/graft_parity/ref.csv > /
 sbt -batch "runMain graft.ParityDump /tmp/graft_parity/logs /tmp/graft_parity/spark.csv" > /dev/null 2>&1
 python3 tools/parity_check.py
 
+echo "== dev tools =="
+# the debug runner (default: q6_parse at sf0.001) and the plan audit on
+# one query: a broken session factory or a broken ExplainAudit fails here
+sbt -batch "runMain graft.DebugOne" 2>&1 | grep -E '^OK q6_parse rows=[0-9]+'
+sbt -batch "runMain graft.cli.ExplainAudit q6_parse" 2>&1 | grep -E '^q6_parse +exchanges='
+
 echo "== flagship smoke =="
 sbt -batch "runMain graft.SmokeEntry" 2>&1 | grep -oE 'ENTRY ROWS = [0-9]+'
 
