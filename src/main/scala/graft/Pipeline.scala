@@ -17,17 +17,20 @@ import graft.sources.{LogSources, ParsedLogs}
   * risk features -> rule engine -> burst detector -> tool scanner ->
   * filters -> sink. The reference keeps its parsed, deduplicated and
   * sessionized table resident and runs every detector and filter over
-  * it (SURVEY §3 entry 3). Here the two frames that branch — the parse
-  * result ([[graft.sources.LineParser.parse]]) and the output of
-  * [[normalize]] — are materialized once when they fit the
-  * `spark.graft.widen.maxBytes` guard ([[graft.operators.Widen.materialize]]),
-  * so under the guard `LineParser.parse`, `LogSources.parseLogs`,
-  * [[normalize]] and [[run]] each run jobs when called, and a pass
-  * scans and parses every input once, however many actions follow.
+  * it (SURVEY §3 entry 3). Here the frames that branch — the parse
+  * result ([[graft.sources.LineParser.parse]]), the sessionizer's
+  * per-row session ids ([[graft.session.Sessionizer.withClusters]])
+  * and the output of [[normalize]] — are materialized once when they
+  * fit the `spark.graft.widen.maxBytes` guard
+  * ([[graft.operators.Widen.materialize]]), so under the guard
+  * `LineParser.parse`, `LogSources.parseLogs`, [[normalize]] and [[run]]
+  * each run jobs when called, and a pass scans, parses, deduplicates
+  * and sessionizes every input once, however many actions follow.
   * Score and filter stay lazy: callers that re-filter interactively
-  * re-run only them, over the materialized normalized frame. Above
-  * the guard every stage is a lazy transform, as at any scale where
-  * holding the table is not an option.
+  * re-run only them, over the materialized normalized frame. [[stage]]
+  * has one consumer, its write, so it writes the normalized frame
+  * lazily. Above the guard every stage is a lazy transform, as at any
+  * scale where holding the table is not an option.
   */
 object Pipeline {
 
@@ -45,19 +48,31 @@ object Pipeline {
     *
     * The result feeds every detector of [[score]], so it is
     * materialized when it fits the byte guard ([[Widen.materialize]]):
-    * this call then runs the dedup and sessionize jobs. The guard
-    * reads this frame's own plan estimate. Spark's size-only estimate
-    * of an inner join is the sum of its sides, so the sessionizer's
-    * two joins keep it at about 1.1x the parse result's estimate and
-    * linear in the input: the two guards switch off at nearly the same
-    * input size (MaterializeSpec pins this).
+    * this call then runs the dedup and sessionize jobs, and with
+    * `strictTimestamps` the C10 check rides the materialize job
+    * ([[checkTimestamps]]). The guard reads this frame's own plan
+    * estimate. Spark's size-only estimate of an inner join is the sum
+    * of its sides, so the sessionizer's two joins keep it at about 1.1x
+    * the parse result's estimate and linear in the input: the two
+    * guards switch off at nearly the same input size (MaterializeSpec
+    * pins this).
     */
   def normalize(parsed: DataFrame, opts: Options = Options()): DataFrame = {
+    val sessioned = sessionize(parsed, opts)
+    if (!opts.strictTimestamps) Widen.materialize(sessioned)
+    else checkTimestamps(sessioned) { observed =>
+      // materialize hands back its input when the guard is shut: no job
+      Some(Widen.materialize(observed)).filter(_ ne observed)
+    }.getOrElse(sessioned)
+  }
+
+  /** [[normalize]] without its final materialize: lazy above the
+    * sessionizer's own checkpoint ([[Sessionizer.withClusters]]). */
+  private def sessionize(parsed: DataFrame, opts: Options): DataFrame = {
     val withId = parsed.withColumn("_row_id", monotonically_increasing_id())
     val deduped = Normalizer.removeDuplicates(withId, col("_row_id"))
-    val timed = Normalizer.withUtcTimestamp(deduped, opts.timeOffsetSeconds, opts.strictTimestamps)
-    val clustered = Sessionizer.withClusters(timed, opts.sessionGapSeconds)
-    Widen.materialize(Sessionizer.withRequestCount(clustered))
+    val timed = Normalizer.withUtcTimestamp(deduped, opts.timeOffsetSeconds, strict = false)
+    Sessionizer.withRequestCount(Sessionizer.withClusters(timed, opts.sessionGapSeconds))
   }
 
   /** Risk stage (reference triage.py:241-245 order: balatro ->
@@ -105,45 +120,56 @@ object Pipeline {
     * instead of re-parsing text. CLI: `--stage <dir>` writes it,
     * `--from-stage <dir>` queries it.
     *
-    * With `strictTimestamps` the C10 hard-error check rides the write
-    * itself ([[writeStageChecked]]) instead of [[normalize]]'s eager
-    * check, which above the byte guard is a separate scan of the text.
+    * The write is the normalized frame's only consumer, so it writes
+    * the lazy frame: no normalize checkpoint, and with
+    * `strictTimestamps` the C10 check rides the write itself
+    * ([[writeStageChecked]]).
     */
   def stage(spark: SparkSession, paths: Seq[String], dir: String,
       opts: Options = Options()): Unit = {
     val graft.sources.ParsedLogs(parsed, _) = LogSources.parseLogs(spark, paths)
-    if (opts.strictTimestamps)
-      writeStageChecked(normalize(parsed, opts.copy(strictTimestamps = false)), dir)
-    else
-      graft.sink.ParquetStage.write(normalize(parsed, opts), dir)
+    val sessioned = sessionize(parsed, opts)
+    if (opts.strictTimestamps) writeStageChecked(sessioned, dir)
+    else graft.sink.ParquetStage.write(sessioned, dir)
   }
 
-  /** The staging-folded C10 strict check: an `observe` metric on the
-    * write counts null `utc_timestamp` rows WHILE the stage is written —
-    * zero extra jobs on the all-valid path (the former eager check was
-    * its own full scan before the write re-parsed everything). Only on
-    * failure does it pay one more job to fetch the reference message's
-    * five examples, then deletes the half-written stage (a later
-    * `--from-stage` must not read a store that failed its contract)
-    * and throws the byte-identical error.
+  /** The staging-folded C10 strict check ([[checkTimestamps]] on the
+    * write): zero extra jobs on the all-valid path. On failure it
+    * deletes the half-written stage (a later `--from-stage` must not
+    * read a store that failed its contract) before it throws.
     */
-  def writeStageChecked(norm: DataFrame, dir: String): Unit = {
-    val obs = org.apache.spark.sql.Observation("strict_timestamps")
-    val observed = norm.observe(obs,
-      sum(when(col("utc_timestamp").isNull, 1L).otherwise(0L)).as("n_bad"))
-    graft.sink.ParquetStage.write(observed, dir)
-    val nBad = obs.get("n_bad") match {
-      case null => 0L
-      case n: java.lang.Number => n.longValue()
-    }
-    if (nBad > 0) {
-      val bad = norm.filter(col("utc_timestamp").isNull).limit(5)
-        .select(col("source"), col("timestamp")).collect()
-      val spark = norm.sparkSession
+  def writeStageChecked(norm: DataFrame, dir: String): Unit =
+    checkTimestamps(norm, onBad = () => {
       val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      throw Normalizer.invalidTimestampError(bad)
+      p.getFileSystem(norm.sparkSession.sessionState.newHadoopConf()).delete(p, true)
+    }) { observed => Some(graft.sink.ParquetStage.write(observed, dir)) }
+
+  /** The C10 strict check on a job that runs anyway: `job` gets `norm`
+    * with a null-`utc_timestamp` count observed on it, and returns its
+    * result, or `None` if it ran no job over that frame (then the check
+    * is an eager action of its own). Only a positive count, or no job,
+    * costs one more action: it fetches the reference message's five
+    * examples from `norm` (in `_row_id` order when `norm` has it), and
+    * if there are any runs `onBad` and throws the byte-identical error
+    * ([[Normalizer.invalidTimestampError]]).
+    */
+  private def checkTimestamps[T](norm: DataFrame, onBad: () => Unit = () => ())(
+      job: DataFrame => Option[T]): Option[T] = {
+    val obs = org.apache.spark.sql.Observation("strict_timestamps")
+    val out = job(norm.observe(obs,
+      sum(when(col("utc_timestamp").isNull, 1L).otherwise(0L)).as("n_bad")))
+    val clean = out.isDefined && (obs.get("n_bad") match {
+      case null => true
+      case n: java.lang.Number => n.longValue() == 0
+    })
+    if (!clean) {
+      // the first five in `_row_id` (input) order, the same on every route
+      val nulls = norm.filter(col("utc_timestamp").isNull)
+      val bad = (if (norm.columns.contains("_row_id")) nulls.orderBy("_row_id") else nulls)
+        .limit(5).select(col("source"), col("timestamp")).collect()
+      if (bad.nonEmpty) { onBad(); throw Normalizer.invalidTimestampError(bad) }
     }
+    out
   }
 
   /** Score + filter over a previously staged store. The staged frame

@@ -19,13 +19,14 @@ object Normalizer {
     * `dd/MMM/yyyy:HH:mm:ss Z`, IIS `yyyy-MM-dd HH:mm:ss` assumed UTC
     * (session time zone is pinned to UTC). Unknown formats are a hard
     * error in the reference (dataframe.py:218-220); with `strict=true`
-    * we fail fast if any row yields a null timestamp. The check is its
-    * own action over `df`'s lineage: in [[graft.Pipeline.normalize]]
-    * under the byte guard that lineage starts at the materialized
-    * parse result, so it costs a pass over in-memory rows; above the
-    * guard it re-reads and re-parses the text. Disable it for very
-    * large batch runs where the parse stage already guarantees the
-    * format.
+    * we fail fast if any row yields a null timestamp. The check here
+    * is its own action over `df`'s lineage (a layered caller that
+    * forces each step uses it). [[graft.Pipeline.normalize]] and
+    * [[graft.Pipeline.stage]] pass `strict = false` and count the null
+    * timestamps on the job they run anyway instead; only with the
+    * byte guard shut is the check a separate pass there too. Disable
+    * it for very large batch runs where the parse stage already
+    * guarantees the format.
     *
     * C11 — `timeOffset` seconds are added for clock-skew correction
     * (reference dataframe.py:239-240).
@@ -48,8 +49,8 @@ object Normalizer {
   }
 
   /** The C10 hard-error, shared by the eager check above and the
-    * staging-folded check ([[graft.Pipeline.writeStageChecked]]) so
-    * both paths raise the byte-identical reference message
+    * pipeline's observed check (`Pipeline.checkTimestamps`) so
+    * every path raises the byte-identical reference message
     * (dataframe.py:218-220).
     */
   def invalidTimestampError(bad: Array[org.apache.spark.sql.Row]): IllegalArgumentException =
@@ -89,8 +90,8 @@ object Normalizer {
     * (per-file line number or `monotonically_increasing_id` captured at
     * parse time).
     *
-    * Scale: one hash-shuffle on the normalized key; `collect_set(source)`
-    * is bounded by the number of input files, not by group size.
+    * Scale: one hash-shuffle and one sort on the normalized key
+    * ([[graft.operators.Dedup.exact]]).
     */
   def removeDuplicates(df: DataFrame, orderCol: Column): DataFrame = {
     val keyExprs = dedupKeyCols.map(c => normKey(c).as(s"_nk_$c"))

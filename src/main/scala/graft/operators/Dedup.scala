@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,10 +12,12 @@ import org.apache.spark.sql.functions._
   * to plain keep-first-per-key dedup (the classic exact-dedup of a
   * training-data pipeline).
   *
-  * Scale: single hash-shuffle on the key; `collect_set` bounded by the
-  * distinct-source count, not group size. For 100 TB corpora prefer
-  * hashing wide keys first (`sha2(concat_ws(...))`) so the shuffle rows
-  * stay narrow — see [[keyHash]].
+  * Scale: single hash-shuffle and one sort on the key; the source test
+  * is a min/max over the key group (`collect_set`, bounded by the
+  * distinct-source count, only for non-orderable source types). For
+  * 100 TB corpora prefer hashing wide keys first
+  * (`sha2(concat_ws(...))`) so the shuffle rows stay narrow — see
+  * [[keyHash]].
   */
 object Dedup {
 
@@ -26,10 +29,16 @@ object Dedup {
       keyCols: Seq[Column],
       orderCol: Column,
       sourceCol: Option[Column] = None): DataFrame = {
-    val w = Window.partitionBy(keyCols: _*)
-    val rn = row_number().over(w.orderBy(orderCol))
+    val w = Window.partitionBy(keyCols: _*).orderBy(orderCol)
+    val rn = row_number().over(w)
+    // the single-source test shares row_number's partition and order
+    // (its own full frame), so one sort serves both: min <=> max equals
+    // size(collect_set) <= 1, nulls included (all-null groups pass both)
+    val group = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val keep = sourceCol match {
-      case Some(src) => rn === 1 || size(collect_set(src).over(w)) <= 1
+      case Some(src) if RowOrdering.isOrderable(df.select(src).schema.head.dataType) =>
+        rn === 1 || (min(src).over(group) <=> max(src).over(group))
+      case Some(src) => rn === 1 || size(collect_set(src).over(group)) <= 1
       case None => rn === 1
     }
     df.withColumn("_keep", keep).filter(col("_keep")).drop("_keep")

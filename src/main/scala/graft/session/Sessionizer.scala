@@ -27,15 +27,16 @@ object Sessionizer {
   val DefaultThreshold = 60L
 
   /** Adds `cluster` (global dense session id). Requires columns
-    * `source`, `ip`, `utc_timestamp`.
+    * `source`, `ip`, `utc_timestamp`. Under the byte guard this call
+    * runs one job ([[withGlobalIds]]).
     */
   def withClusters(df: DataFrame, threshold: Long = DefaultThreshold): DataFrame = {
-    val epoch = col("utc_timestamp").cast(LongType)
-    val grp = Window.partitionBy(col("source"), col("ip")).orderBy(epoch)
+    // lag and cumsum both order by the one `_epoch` column: one sort
+    val grp = Window.partitionBy(col("source"), col("ip")).orderBy(col("_epoch"))
 
-    val delta = epoch - lag(epoch, 1).over(grp)
+    val delta = col("_epoch") - lag(col("_epoch"), 1).over(grp)
     val newSession = when(delta.isNull || delta < threshold, 0L).otherwise(1L)
-    val withLocal = df.withColumn("_epoch", epoch)
+    val withLocal = df.withColumn("_epoch", col("utc_timestamp").cast(LongType))
       .withColumn("_local_id",
         sum(newSession).over(grp.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
 
@@ -53,20 +54,19 @@ object Sessionizer {
     * formulation with plan-only operators:
     *
     *  - no RDD barrier (stays whole-stage-codegen'd, resumable by AQE),
-    *  - no eager driver job at plan-construction time,
+    *  - no collect of the key space to the driver,
     *  - the groups aggregate reuses the window's (source, ip) hash
     *    partitioning (no new exchange of its own), and the join back is
     *    on the same key.
     *
-    * The big side is NOT shared between branches, though. Column
-    * pruning gives the groups branch a narrower (source, ip) exchange
-    * than the join's full-row one, so exchange reuse cannot merge them:
-    * the executed plan holds two copies of `withLocal`'s subtree (the
-    * lag/cumsum window and everything under it, e.g. normalize's dedup
-    * shuffle), and only the two consumers of `groups` share one
-    * exchange. [[graft.Pipeline.normalize]] materializes its OUTPUT
-    * (under the byte guard), so the detectors downstream read the
-    * sessionized rows once; the two copies inside this plan remain.
+    * `withLocal` feeds both the groups branch and the join back, and
+    * column pruning gives the groups branch a narrower (source, ip)
+    * exchange than the join's full-row one, so exchange reuse cannot
+    * merge them. It therefore goes through [[graft.operators.Widen.materialize]]
+    * once: under the byte guard this call runs one job (the lag/cumsum
+    * window and everything under it, e.g. normalize's dedup), and both
+    * branches read that checkpoint. Above the guard it stays lazy, and
+    * each branch recomputes the subtree.
     *
     * The running total itself nests two levels so no task ever sees the
     * full (source, ip) key space (10⁸–10⁹ pairs at the 100 TB design
@@ -85,7 +85,8 @@ object Sessionizer {
     *
     * base(source, ip) = src_base(source) + ip_base(source, ip).
     */
-  private def withGlobalIds(withLocal: DataFrame): DataFrame = {
+  private def withGlobalIds(local: DataFrame): DataFrame = {
+    val withLocal = graft.operators.Widen.materialize(local)
     val groups = withLocal
       .groupBy(col("source"), col("ip"))
       .agg((max(col("_local_id")) + 1).as("_n_sessions"))

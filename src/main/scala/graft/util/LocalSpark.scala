@@ -17,7 +17,10 @@ object LocalSpark {
     // events.parquet has carried TIMESTAMP(NANOS), which Spark has no
     // native type for: read it as long, SparkEntry.eventsTable converts
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    // one triage pass generates ~130 classes; at Spark's default of 100
+    // cache entries every repeated pass recompiled them all (0 at 1000)
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** A session on `master` with [[SharedConf]]. `extra` is applied last,
     * so it may override any shared key (`spark.app.name` included).

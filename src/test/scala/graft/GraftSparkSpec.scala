@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftListenerInterop
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,4 +27,21 @@ object TestSpark {
 
 abstract class GraftSparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Jobs started while `body` runs: listener delivery is async, so
+    * drain the listener bus after the (synchronous) actions return.
+    */
+  protected def countJobs(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
+      n.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

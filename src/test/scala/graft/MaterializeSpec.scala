@@ -7,9 +7,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerInterop
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, Lag, RowNumber}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -19,12 +21,13 @@ import graft.rules.RuleEngine
 import graft.sink.Renderer
 import graft.sources.LogSources
 
-/** The triage pass's two materialized intermediates
-  * (`operators.Widen.materialize` in `LineParser.parse` and
-  * `Pipeline.normalize`): under the byte guard each input is scanned
-  * once per pass, and with the guard forced shut
-  * (`spark.graft.widen.maxBytes=0`) the lazy fallback gives the same
-  * CSV, error count and strict-timestamp error.
+/** The triage pass's materialized intermediates
+  * (`operators.Widen.materialize` in `LineParser.parse`,
+  * `Sessionizer.withClusters` and `Pipeline.normalize`): under the byte
+  * guard each input is scanned, deduplicated and sessionized once per
+  * pass, the stage write reads no normalize checkpoint, and with the
+  * guard forced shut (`spark.graft.widen.maxBytes=0`) the lazy fallback
+  * gives the same CSV, error count and strict-timestamp error.
   */
 class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
 
@@ -121,15 +124,13 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     assert(norm32k <= norm8k * 5, s"4x the lines: $norm8k -> $norm32k")
   }
 
-  /** Input relations the file-source scans of every query run while
-    * `body` runs read, one entry per scan: format plus root paths. */
-  private def scansDuring(body: => Unit): Seq[String] = {
-    val scans = new ConcurrentLinkedQueue[String]
+  /** `f` of every query run while `body` runs (its action name and
+    * execution), concatenated. */
+  private def queriesDuring[T](f: (String, QueryExecution) => Seq[T])(body: => Unit): Seq[T] = {
+    val found = new ConcurrentLinkedQueue[T]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec =>
-          s"${s.relation.fileFormat} ${s.relation.location.rootPaths.mkString(",")}"
-        }.foreach(scans.add)
+        f(funcName, qe).foreach(found.add)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -137,8 +138,16 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
       body
       GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    scans.asScala.toSeq
+    found.asScala.toSeq
   }
+
+  /** Input relations the file-source scans of every query run while
+    * `body` runs read, one entry per scan: format plus root paths. */
+  private def scansDuring(body: => Unit): Seq[String] =
+    queriesDuring((_, qe) => collectWithSubqueries(qe.executedPlan) {
+      case s: FileSourceScanExec =>
+        s"${s.relation.fileFormat} ${s.relation.location.rootPaths.mkString(",")}"
+    })(body)
 
   test("parse once: a triage pass scans each input relation exactly once") {
     val dir = logDir(GoldenTableSpec.fixtureLines :+ unparseable)
@@ -152,6 +161,74 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     val perRelation = data.groupBy(identity).map { case (k, v) => k -> v.size }
     assert(perRelation.size == 2, s"expected the text and csv relations, got $scans")
     assert(perRelation.values.forall(_ == 1), s"scans per relation: $perRelation")
+  }
+
+  /** Windows of normalize executed while `body` runs, one entry per
+    * execution: "dedup" is the row_number over the normalized `_nk_`
+    * keys, "session" the sessionizer's lag over `(source, ip)`. */
+  private def normalizeWindowsDuring(body: => Unit): Map[String, Int] = {
+    def has(w: WindowExec, f: Expression => Boolean) = w.windowExpression.exists(_.exists(f))
+    def keys(w: WindowExec) = w.partitionSpec.flatMap(_.references.map(_.name)).toSet
+    queriesDuring((_, qe) => collectWithSubqueries(qe.executedPlan) {
+      case w: WindowExec if has(w, _.isInstanceOf[RowNumber]) &&
+          keys(w).exists(_.startsWith("_nk_")) => "dedup"
+      case w: WindowExec if has(w, _.isInstanceOf[Lag]) && keys(w) == Set("source", "ip") =>
+        "session"
+    })(body).groupBy(identity).map { case (k, v) => k -> v.size }
+  }
+
+  test("dedup and sessionize once: each window runs once per triage pass") {
+    val dir = logDir(GoldenTableSpec.fixtureLines :+ unparseable)
+    var jobs = 0
+    val windows = normalizeWindowsDuring { jobs = countJobs(triagePass(Seq(dir))) }
+    // 3 executions of each and 21 jobs when an eager C10 check and
+    // both sessionizer branches re-ran them; 19-20 jobs now (AQE's
+    // runtime join choice moves the count by one)
+    assert(windows == Map("dedup" -> 1, "session" -> 1), s"window executions: $windows")
+    assert(jobs <= 20, s"jobs per pass: $jobs")
+  }
+
+  test("stage: the store is written from the lazy normalized frame") {
+    val dir = logDir(GoldenTableSpec.fixtureLines)
+    val store = Files.createTempDirectory("graft_stage").resolve("store").toString
+    val checkpointed = queriesDuring { (funcName, qe) =>
+      if (funcName == "localCheckpoint") Seq(qe.analyzed.output.map(_.name)) else Nil
+    }(Pipeline.stage(spark, Seq(dir), store))
+    // the parse result and the sessionizer's local ids are checkpointed,
+    // the normalized frame (the one with request_count) is not
+    assert(checkpointed.size == 2, checkpointed)
+    assert(!checkpointed.exists(_.contains("request_count")), checkpointed)
+  }
+
+  test("C10: guard open, guard shut and stage raise the same text") {
+    val badTs = Seq(
+      """203.0.113.8 - - [21/Foo/2025:10:00:00 +0000] "GET / HTTP/1.1" 200 1 "-" "x"""",
+      """198.51.100.9 - - [32/Apr/2025:10:00:00 +0000] "GET /a HTTP/1.1" 200 1 "-" "x"""")
+    val dir = logDir(GoldenTableSpec.fixtureLines ++ badTs)
+    def normalizeError = intercept[IllegalArgumentException](
+      Pipeline.normalize(LogSources.parseLogs(spark, Seq(dir)).parsed)).getMessage
+    val open = normalizeError
+    val shut = unguarded(normalizeError)
+    val store = Files.createTempDirectory("graft_stage").resolve("store")
+    val staged = intercept[IllegalArgumentException](
+      Pipeline.stage(spark, Seq(dir), store.toString)).getMessage
+    assert(open.startsWith("Found timestamps with an unknown or invalid format: "), open)
+    assert(open.contains("access.log:'21/Foo/2025:10:00:00 +0000'"), open)
+    assert(open.contains("access.log:'32/Apr/2025:10:00:00 +0000'"), open)
+    assert(shut == open)
+    assert(staged == open)
+    assert(!Files.exists(store))
+  }
+
+  test("C10: on valid input the observed check runs no query of its own") {
+    val parsed = LogSources.parseLogs(spark, Seq(logDir(GoldenTableSpec.fixtureLines))).parsed
+    // queries, not jobs: AQE's runtime join choice moves a query's job
+    // count by one from run to run
+    def queries(opts: Pipeline.Options) =
+      queriesDuring((_, _) => Seq(1))(Pipeline.normalize(parsed, opts)).size
+    val unchecked = queries(Pipeline.Options(strictTimestamps = false))
+    val checked = queries(Pipeline.Options())
+    assert(checked == unchecked, s"queries: $unchecked unchecked, $checked checked")
   }
 
   /** A documents table of `(doc_id, text)` rows in a fresh dir, the

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftListenerInterop
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,23 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class StageCheckSpec extends GraftSparkSpec {
   import spark.implicits._
-
-  /** Jobs started while `body` runs: listener delivery is async, so
-    * drain the listener bus after the (synchronous) actions return.
-    */
-  private def countJobs(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
-      n.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def normFrame(rows: Seq[(String, String, String, String)]): DataFrame =
     rows.toDF("source", "ip", "timestamp", "_ts")

@@ -21,6 +21,13 @@ python3 tools/ref_golden.py /tmp/graft_parity/logs /tmp/graft_parity/ref.csv > /
 sbt -batch "runMain graft.ParityDump /tmp/graft_parity/logs /tmp/graft_parity/spark.csv" > /dev/null 2>&1
 python3 tools/parity_check.py
 
+echo "== bench package =="
+# bench/ compiles src/main with its own workloads, which call Pipeline,
+# Sessionizer, Normalizer and LogSources directly: a src/main API change
+# that breaks them fails here, not only when the benchmark next runs
+python3 bench/build.py
+python3 -m unittest discover -s bench -p 'test_*.py'
+
 echo "== dev tools =="
 # the debug runner (default: q6_parse at sf0.001) and the plan audit on
 # one query: a broken session factory or a broken ExplainAudit fails here
