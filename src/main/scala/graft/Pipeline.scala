@@ -9,7 +9,7 @@ import graft.operators.{BurstDetector, ToolScanner, Widen}
 import graft.query.{FilterOptions, Filters}
 import graft.rules.{GraftConfig, RuleEngine}
 import graft.session.Sessionizer
-import graft.sources.{LogSources, ParsedLogs}
+import graft.sources.LogSources
 
 /** End-to-end pipeline wiring (reference triage.py:227-263 / SURVEY §3).
   *
@@ -23,9 +23,9 @@ import graft.sources.{LogSources, ParsedLogs}
   * and the output of [[normalize]] — are materialized once when they
   * fit the `spark.graft.widen.maxBytes` guard
   * ([[graft.operators.Widen.materialize]]), so under the guard
-  * `LineParser.parse`, `LogSources.parseLogs`, [[normalize]] and [[run]]
-  * each run jobs when called, and a pass scans, parses, deduplicates
-  * and sessionizes every input once, however many actions follow.
+  * `LineParser.parse`, `LogSources.parseLogs` and [[normalize]] each
+  * run jobs when called, and a pass scans, parses, deduplicates and
+  * sessionizes every input once, however many actions follow.
   * Score and filter stay lazy: callers that re-filter interactively
   * re-run only them, over the materialized normalized frame. [[stage]]
   * has one consumer, its write, so it writes the normalized frame
@@ -96,24 +96,6 @@ object Pipeline {
     ToolScanner(burst, config.toolSignatures)
   }
 
-  /** Full pipeline from raw log paths. Under the byte guard the parse
-    * and normalize steps run their jobs during this call; score and
-    * filter stay lazy.
-    */
-  def run(
-      spark: SparkSession,
-      paths: Seq[String],
-      config: GraftConfig,
-      rules: Seq[RuleEngine.SigmaRule],
-      webshells: Set[String],
-      opts: Options = Options(),
-      filters: FilterOptions = FilterOptions()): DataFrame = {
-    val ParsedLogs(parsed, _) = LogSources.parseLogs(spark, paths)
-    val normalized = normalize(parsed, opts)
-    val scored = score(normalized, config, rules, webshells, opts)
-    Filters(scored, filters, col("_row_id"))
-  }
-
   /** Stage the normalized frame as the date/source-partitioned parquet
     * store (SURVEY §4.3 / PLANS.md layout) — parse once, re-query many:
     * subsequent runs read the staged table with partition pruning
@@ -126,12 +108,21 @@ object Pipeline {
     * ([[writeStageChecked]]).
     */
   def stage(spark: SparkSession, paths: Seq[String], dir: String,
-      opts: Options = Options()): Unit = {
-    val graft.sources.ParsedLogs(parsed, _) = LogSources.parseLogs(spark, paths)
+      opts: Options = Options()): Unit =
+    stage(LogSources.parseLogs(spark, paths).parsed, dir, opts)
+
+  /** [[stage]] over an already-parsed frame (the CLI parses first, for
+    * its error side channel). */
+  def stage(parsed: DataFrame, dir: String, opts: Options): Unit = {
     val sessioned = sessionize(parsed, opts)
     if (opts.strictTimestamps) writeStageChecked(sessioned, dir)
     else graft.sink.ParquetStage.write(sessioned, dir)
   }
+
+  /** A staged store as [[score]] reads it: normalize's outputs, without
+    * the partition column. */
+  def readStage(spark: SparkSession, dir: String): DataFrame =
+    graft.sink.ParquetStage.read(spark, dir).drop("event_date")
 
   /** The staging-folded C10 strict check ([[checkTimestamps]] on the
     * write): zero extra jobs on the all-valid path. On failure it
@@ -148,10 +139,9 @@ object Pipeline {
     * with a null-`utc_timestamp` count observed on it, and returns its
     * result, or `None` if it ran no job over that frame (then the check
     * is an eager action of its own). Only a positive count, or no job,
-    * costs one more action: it fetches the reference message's five
-    * examples from `norm` (in `_row_id` order when `norm` has it), and
-    * if there are any runs `onBad` and throws the byte-identical error
-    * ([[Normalizer.invalidTimestampError]]).
+    * costs one more action: [[Normalizer.requireTimestamps]], which
+    * fetches the reference message's five examples and, if there are
+    * any, runs `onBad` and throws.
     */
   private def checkTimestamps[T](norm: DataFrame, onBad: () => Unit = () => ())(
       job: DataFrame => Option[T]): Option[T] = {
@@ -162,13 +152,7 @@ object Pipeline {
       case null => true
       case n: java.lang.Number => n.longValue() == 0
     })
-    if (!clean) {
-      // the first five in `_row_id` (input) order, the same on every route
-      val nulls = norm.filter(col("utc_timestamp").isNull)
-      val bad = (if (norm.columns.contains("_row_id")) nulls.orderBy("_row_id") else nulls)
-        .limit(5).select(col("source"), col("timestamp")).collect()
-      if (bad.nonEmpty) { onBad(); throw Normalizer.invalidTimestampError(bad) }
-    }
+    if (!clean) Normalizer.requireTimestamps(norm, onBad)
     out
   }
 
@@ -184,8 +168,7 @@ object Pipeline {
       webshells: Set[String],
       opts: Options = Options(),
       filters: FilterOptions = FilterOptions()): DataFrame = {
-    val staged = graft.sink.ParquetStage.read(spark, stageDir).drop("event_date")
-    val scored = score(staged, config, rules, webshells, opts)
+    val scored = score(readStage(spark, stageDir), config, rules, webshells, opts)
     Filters(scored, filters, col("_row_id"))
   }
 }

@@ -2,6 +2,7 @@ package graft.cli
 
 import scala.annotation.tailrec
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.Pipeline
@@ -97,6 +98,8 @@ object Triage {
   private def ints(v: String): Seq[Int] = strs(v).map(_.toInt)
   private def longs(v: String): Seq[Long] = strs(v).map(_.toLong)
 
+  /** Parses and checks the arguments, then runs [[run]] in a session of
+    * its own, which it stops on exit. */
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toList, Args())
     require(args.paths.nonEmpty || args.fromStage.nonEmpty,
@@ -110,100 +113,98 @@ object Triage {
     val spark = LocalSpark.session(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "WARN",
       Seq("spark.app.name" -> "graft-triage"))
+    try run(spark, args) finally spark.stop()
+  }
 
-    try {
-      val config0 = args.config.map(GraftConfig.load).getOrElse(GraftConfig.default)
-      val config = config0.copy(
-        rulesPath = args.rules.getOrElse(config0.rulesPath),
-        webshellPath = args.shells.getOrElse(config0.webshellPath))
-      val ruleSet = RuleEngine.loadRules(config.rulesPath)
-      val webshells = GraftConfig.loadWebshells(config.webshellPath)
+  /** One CLI invocation in `spark`: the raw-text, `--stage` or
+    * `--from-stage` route, then score, filter and the sink, printing
+    * to `Console.out`. */
+  def run(spark: SparkSession, args: Args): Unit = {
+    val config0 = args.config.map(GraftConfig.load).getOrElse(GraftConfig.default)
+    val config = config0.copy(
+      rulesPath = args.rules.getOrElse(config0.rulesPath),
+      webshellPath = args.shells.getOrElse(config0.webshellPath))
+    val ruleSet = RuleEngine.loadRules(config.rulesPath)
+    val webshells = GraftConfig.loadWebshells(config.webshellPath)
 
-      // default extension-ignore + authorized-scanner ip-ignore come from
-      // config, like triage.py:248-263 wiring
-      val filters = args.filters.copy(
-        extensionIgnore =
-          if (args.filters.extensionIgnore.nonEmpty) args.filters.extensionIgnore
-          else config.ignoreExtensions,
-        ipIgnore =
-          if (args.filters.ipIgnore.nonEmpty) args.filters.ipIgnore
-          else config.ignoreIp)
+    // default extension-ignore + authorized-scanner ip-ignore come from
+    // config, like triage.py:248-263 wiring
+    val filters = args.filters.copy(
+      extensionIgnore =
+        if (args.filters.extensionIgnore.nonEmpty) args.filters.extensionIgnore
+        else config.ignoreExtensions,
+      ipIgnore =
+        if (args.filters.ipIgnore.nonEmpty) args.filters.ipIgnore
+        else config.ignoreIp)
 
-      val normalized = args.fromStage match {
-        case Some(stage) =>
-          // parse + normalize already happened when the stage was
-          // written; re-query straight off the partitioned store
-          graft.sink.ParquetStage.read(spark, stage).drop("event_date")
-        case None =>
-          // S7 error side channel (reference writes errors.log + reports
-          // the parsed count, parser.py:121-124)
-          val parsedLogs = LogSources.parseLogs(spark, args.paths)
-          val errCount = parsedLogs.errors.count()
-          if (errCount > 0) {
-            // GRAFT_OUT_DIR keeps run artifacts out of the CWD (and the
-            // repo); the reference's append-in-CWD behavior grows a
-            // committed file.
-            val outDir = sys.env.getOrElse("GRAFT_OUT_DIR", System.getProperty("java.io.tmpdir"))
-            val errPath = java.nio.file.Paths.get(outDir, "errors.log").toString
-            System.err.println(s"[*] $errCount unparseable lines; writing to $errPath")
-            val errs = parsedLogs.errors.limit(10000).collect()
-            val w = new java.io.FileWriter(errPath, true)
-            try errs.foreach(r => w.write(s"Failed to parse [${r.getString(0)}]: ${r.getString(1)}\n"))
-            finally w.close()
-          }
-          args.stageDir match {
-            case Some(stage) =>
-              // strict C10 check rides the stage write (observe metric)
-              // instead of normalize's eager check, which above the byte
-              // guard is a second scan of the text
-              val norm = Pipeline.normalize(parsedLogs.parsed,
-                Pipeline.Options(timeOffsetSeconds = args.timeOffset,
-                  strictTimestamps = false))
-              Pipeline.writeStageChecked(norm, stage)
-              println(s"[*] Staged normalized store to $stage")
-              graft.sink.ParquetStage.read(spark, stage).drop("event_date")
-            case None => Pipeline.normalize(parsedLogs.parsed,
-              Pipeline.Options(timeOffsetSeconds = args.timeOffset))
-          }
-      }
-      val scored = Pipeline.score(normalized, config, ruleSet, webshells)
-      val out = graft.query.Filters(scored, filters, col("_row_id"))
+    val normalized = args.fromStage match {
+      case Some(stage) =>
+        // parse + normalize already happened when the stage was
+        // written; re-query straight off the partitioned store
+        Pipeline.readStage(spark, stage)
+      case None =>
+        // S7 error side channel (reference writes errors.log + reports
+        // the parsed count, parser.py:121-124)
+        val parsedLogs = LogSources.parseLogs(spark, args.paths)
+        val errCount = parsedLogs.errors.count()
+        if (errCount > 0) {
+          // GRAFT_OUT_DIR keeps run artifacts out of the CWD (and the
+          // repo); the reference's append-in-CWD behavior grows a
+          // committed file.
+          val outDir = sys.env.getOrElse("GRAFT_OUT_DIR", System.getProperty("java.io.tmpdir"))
+          val errPath = java.nio.file.Paths.get(outDir, "errors.log").toString
+          System.err.println(s"[*] $errCount unparseable lines; writing to $errPath")
+          val errs = parsedLogs.errors.limit(10000).collect()
+          val w = new java.io.FileWriter(errPath, true)
+          try errs.foreach(r => w.write(s"Failed to parse [${r.getString(0)}]: ${r.getString(1)}\n"))
+          finally w.close()
+        }
+        val opts = Pipeline.Options(timeOffsetSeconds = args.timeOffset)
+        args.stageDir match {
+          case Some(stage) =>
+            Pipeline.stage(parsedLogs.parsed, stage, opts)
+            println(s"[*] Staged normalized store to $stage")
+            Pipeline.readStage(spark, stage)
+          case None => Pipeline.normalize(parsedLogs.parsed, opts)
+        }
+    }
+    val scored = Pipeline.score(normalized, config, ruleSet, webshells)
+    val out = graft.query.Filters(scored, filters, col("_row_id"))
 
-      val display = Renderer.withMethodPath(out)
+    val display = Renderer.withMethodPath(out)
 
-      // Unbounded CSV to stdout streams partition-at-a-time
-      // (toLocalIterator) — constant driver memory. Every other shape
-      // materializes: the table layout needs all rows for column widths,
-      // and the bounded default (--limit, Args.DefaultLimit) caps that
-      // collect so the driver survives engine-scale outputs.
-      if (args.limit == 0 && args.csv && args.emailTo.isEmpty) {
-        import scala.jdk.CollectionConverters._
-        val n = Renderer.renderCsvStream(display.toLocalIterator().asScala, print)
-        if (n == 0) println("<EMPTY>")
-      } else {
-        val (rows, truncated) =
-          if (args.limit == 0) {
-            // table/email layouts need every row on the driver (column
-            // widths / one attachment string) — unlike the streaming CSV
-            // path above, --limit 0 here really does materialize
-            System.err.println("[*] --limit 0 with table or email output " +
-              "materializes the full result on the driver; use CSV output " +
-              "for constant-memory streaming.")
-            import scala.jdk.CollectionConverters._
-            (display.toLocalIterator().asScala.toVector: Seq[org.apache.spark.sql.Row],
-              false)
-          } else {
-            val fetch = if (args.limit == Int.MaxValue) args.limit else args.limit + 1
-            val r = display.limit(fetch).collect().toSeq
-            if (r.size > args.limit) {
-              System.err.println(s"[*] Output truncated to ${args.limit} rows " +
-                "(raise --limit, or --limit 0 for unbounded).")
-              (r.take(args.limit), true)
-            } else (r, false)
-          }
-        emitRows(rows, args, config, truncated)
-      }
-    } finally spark.stop()
+    // Unbounded CSV to stdout streams partition-at-a-time
+    // (toLocalIterator) — constant driver memory. Every other shape
+    // materializes: the table layout needs all rows for column widths,
+    // and the bounded default (--limit, Args.DefaultLimit) caps that
+    // collect so the driver survives engine-scale outputs.
+    if (args.limit == 0 && args.csv && args.emailTo.isEmpty) {
+      import scala.jdk.CollectionConverters._
+      val n = Renderer.renderCsvStream(display.toLocalIterator().asScala, print)
+      if (n == 0) println("<EMPTY>")
+    } else {
+      val (rows, truncated) =
+        if (args.limit == 0) {
+          // table/email layouts need every row on the driver (column
+          // widths / one attachment string) — unlike the streaming CSV
+          // path above, --limit 0 here really does materialize
+          System.err.println("[*] --limit 0 with table or email output " +
+            "materializes the full result on the driver; use CSV output " +
+            "for constant-memory streaming.")
+          import scala.jdk.CollectionConverters._
+          (display.toLocalIterator().asScala.toVector: Seq[org.apache.spark.sql.Row],
+            false)
+        } else {
+          val fetch = if (args.limit == Int.MaxValue) args.limit else args.limit + 1
+          val r = display.limit(fetch).collect().toSeq
+          if (r.size > args.limit) {
+            System.err.println(s"[*] Output truncated to ${args.limit} rows " +
+              "(raise --limit, or --limit 0 for unbounded).")
+            (r.take(args.limit), true)
+          } else (r, false)
+        }
+      emitRows(rows, args, config, truncated)
+    }
   }
 
   private def emitRows(rows: Seq[org.apache.spark.sql.Row], args: Args,

@@ -19,14 +19,11 @@ object Normalizer {
     * `dd/MMM/yyyy:HH:mm:ss Z`, IIS `yyyy-MM-dd HH:mm:ss` assumed UTC
     * (session time zone is pinned to UTC). Unknown formats are a hard
     * error in the reference (dataframe.py:218-220); with `strict=true`
-    * we fail fast if any row yields a null timestamp. The check here
-    * is its own action over `df`'s lineage (a layered caller that
-    * forces each step uses it). [[graft.Pipeline.normalize]] and
-    * [[graft.Pipeline.stage]] pass `strict = false` and count the null
-    * timestamps on the job they run anyway instead; only with the
-    * byte guard shut is the check a separate pass there too. Disable
-    * it for very large batch runs where the parse stage already
-    * guarantees the format.
+    * we fail fast if any row yields a null timestamp
+    * ([[requireTimestamps]], its own action over `df`'s lineage, for a
+    * layered caller that forces each step). [[graft.Pipeline.normalize]]
+    * and [[graft.Pipeline.stage]] pass `strict = false` and count the
+    * null timestamps on the job they run anyway instead.
     *
     * C11 — `timeOffset` seconds are added for clock-skew correction
     * (reference dataframe.py:239-240).
@@ -40,23 +37,29 @@ object Normalizer {
       if (timeOffset == 0) parsed
       else parsed + expr(s"INTERVAL $timeOffset SECOND")
     val out = df.withColumn("utc_timestamp", shifted)
-    if (strict) {
-      val bad = out.filter(col("utc_timestamp").isNull).limit(5)
-        .select(col("source"), col("timestamp")).collect()
-      if (bad.nonEmpty) throw invalidTimestampError(bad)
-    }
+    if (strict) requireTimestamps(out)
     out
   }
 
-  /** The C10 hard-error, shared by the eager check above and the
-    * pipeline's observed check (`Pipeline.checkTimestamps`) so
-    * every path raises the byte-identical reference message
-    * (dataframe.py:218-220).
+  /** The C10 hard error, shared by the eager check above and the
+    * pipeline's observed check (`Pipeline.checkTimestamps`), so every
+    * route raises the byte-identical reference message
+    * (dataframe.py:218-220) naming the same rows: the first five rows
+    * of `df` with a null `utc_timestamp`, in `_row_id` (input) order
+    * when `df` has that column. If there are any, runs `onBad` and
+    * throws.
     */
-  def invalidTimestampError(bad: Array[org.apache.spark.sql.Row]): IllegalArgumentException =
-    new IllegalArgumentException(
-      "Found timestamps with an unknown or invalid format: " +
-        bad.map(r => s"${r.get(0)}:'${r.get(1)}'").mkString(", "))
+  def requireTimestamps(df: DataFrame, onBad: () => Unit = () => ()): Unit = {
+    val nulls = df.filter(col("utc_timestamp").isNull)
+    val bad = (if (df.columns.contains("_row_id")) nulls.orderBy("_row_id") else nulls)
+      .limit(5).select(col("source"), col("timestamp")).collect()
+    if (bad.nonEmpty) {
+      onBad()
+      throw new IllegalArgumentException(
+        "Found timestamps with an unknown or invalid format: " +
+          bad.map(r => s"${r.get(0)}:'${r.get(1)}'").mkString(", "))
+    }
+  }
 
   /** C9 — the normalized copies of the 8 dedup-key columns
     * (reference dataframe.py:170-186): trim, lower, strip one wrapping

@@ -146,6 +146,22 @@ object IndexOps {
     fs(spark, p).exists(p)
   }
 
+  /** The replay anti-join of the incremental indexes: `df` minus the
+    * rows whose `idCol` appears in the `id` column of the ledger
+    * dataset at `ledger`, or `None` when no ledger exists yet (the
+    * first batch: nothing to drop, and nothing to probe). With
+    * `castLong` the ledger id is cast to long first.
+    */
+  def unledgered(df: DataFrame, idCol: String, ledger: String,
+      castLong: Boolean = false): Option[DataFrame] = {
+    val spark = df.sparkSession
+    if (!exists(spark, ledger)) None
+    else {
+      val id = if (castLong) col("id").cast("long") else col("id")
+      Some(df.join(spark.read.parquet(ledger).select(id.as(idCol)), Seq(idCol), "left_anti"))
+    }
+  }
+
   /** Tombstone `ids` (their `idCol`, long-castable) in the index at
     * `dir`: O(batch) append, honored by every probe from the next read
     * on. Idempotent — re-tombstoning an id is harmless (anti-join

@@ -95,14 +95,10 @@ object LinkGraph {
     * Output: (id, n_triangles), one row per vertex WITH at least one
     * triangle (left-join against the node set for a dense frame).
     */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    // checkpoint the canonical set ONCE: the small-graph probe needs it
-    // materialized, and the distributed path previously re-derived the
-    // dedup subtree twice (once for the wedge orientation, once as the
-    // closure probe)
-    val und = canonicalUndirected(edges).localCheckpoint(true)
-    try triangleCountsFromUnd(und) finally { und.unpersist(); () }
-  }
+  def triangleCounts(edges: DataFrame): DataFrame =
+    // pinned: the small-graph probe collects it, and the distributed
+    // path reads it twice (wedge orientation and closure probe)
+    Widen.pinned(canonicalUndirected(edges))(triangleCountsFromUnd)
 
   /** Canonical undirected simple edge set (a < b, deduped, loops
     * dropped) — shared by [[triangleCounts]] and [[clusteringCoeff]].
@@ -172,14 +168,12 @@ object LinkGraph {
     val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("d"))
     // orient (u -> w) iff (deg, id) of u < of w: each undirected edge
     // exactly once, wedges form at the small end
-    val oriented = sym
+    Widen.pinned(sym
       .join(deg.withColumnRenamed("v", "a").withColumnRenamed("d", "_da"), "a")
       .join(deg.withColumnRenamed("v", "b").withColumnRenamed("d", "_db"), "b")
       .filter(col("_da") < col("_db") ||
         (col("_da") === col("_db") && col("a") < col("b")))
-      .select(col("a").as("u"), col("b").as("w"))
-      .localCheckpoint(true)
-    try {
+      .select(col("a").as("u"), col("b").as("w"))) { oriented =>
       val wedges = oriented.as("e1")
         .join(oriented.as("e2"),
           col("e1.u") === col("e2.u") && col("e1.w") < col("e2.w"))
@@ -193,17 +187,15 @@ object LinkGraph {
           greatest(col("x"), col("y")) === und("b"), "left_semi")
       // EAGER result (one aggregated row per triangle-corner vertex,
       // O(V) — tiny next to the wedge stream it summarizes): a lazy
-      // return would keep `oriented`'s checkpointed blocks referenced
-      // forever, so repeated calls would accumulate block-manager
-      // memory until RDD GC. Materialize, then release `oriented` in
-      // the finally — the returned frame's own blocks live exactly as
-      // long as the caller holds the frame.
+      // return would read `oriented`'s blocks after the pin released
+      // them. The returned frame's own blocks live exactly as long as
+      // the caller holds the frame.
       closed
         .select(explode(array(col("u"), col("x"), col("y"))).as("id"))
         .groupBy(col("id"))
         .agg(count(lit(1)).as("n_triangles"))
         .localCheckpoint(true)
-    } finally { oriented.unpersist(); () }
+    }
   }
 
   /** Local clustering coefficient per node over the same undirected
@@ -214,12 +206,9 @@ object LinkGraph {
     * Output: (id, degree, n_triangles, coeff_x10000), one row per
     * vertex of the simple graph.
     */
-  def clusteringCoeff(edges: DataFrame): DataFrame = {
-    // und computed ONCE (checkpointed) and shared by the degree and
-    // triangle paths — previously the triangle call re-derived it from
-    // the raw edges a second time
-    val und = canonicalUndirected(edges).localCheckpoint(true)
-    try {
+  def clusteringCoeff(edges: DataFrame): DataFrame =
+    // pinned once, shared by the degree and triangle paths
+    Widen.pinned(canonicalUndirected(edges)) { und =>
       val deg = und.select(col("a").as("id"))
         .union(und.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("degree"))
@@ -231,8 +220,7 @@ object LinkGraph {
             expr("(coalesce(n_triangles, 0L) * 20000) DIV (degree * (degree - 1))"))
             .otherwise(0L).as("coeff_x10000"))
         .localCheckpoint(true)
-    } finally { und.unpersist(); () }
-  }
+    }
 
   /** Incremental PageRank (round-10 verdict item 8): re-rank ONLY the
     * weakly-connected components touched by the snapshot delta, carry

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -42,6 +43,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * partition-agnostic — do NOT widen above `spark_partition_id`,
   * `monotonically_increasing_id`, seeded `rand`, or input_file_name
   * consumers (the operators here already ban those as shuffle keys).
+  *
+  * The materialization family lives here too: [[materialize]] (a
+  * checkpoint under the byte guard, for frames with two or more
+  * consumers) and [[pinned]] (an unguarded checkpoint scoped to a
+  * body and released after it, for pins that correctness needs).
   */
 object Widen {
   /** Key-preserving widen: hash-repartition to the target width on
@@ -100,6 +106,29 @@ object Widen {
     */
   def materialize(df: DataFrame): DataFrame =
     if (isSmall(df)) df.localCheckpoint(eager = true) else df
+
+  /** The always-checkpoint member of the family: checkpoint `df`
+    * eagerly (one job, now), run `body` over the checkpointed frame,
+    * and release its blocks when `body` returns or throws. Use it where
+    * the pin is needed for correctness or lineage whatever the size, so
+    * there is no byte guard: an ingest batch that must be read before
+    * the index it probes is mutated, a frame several joins of one
+    * operator read. Use [[materialize]] where the checkpoint only saves
+    * recomputation: there the guard keeps large inputs lazy.
+    *
+    * `body`'s result must not read the pinned frame lazily: its blocks
+    * are gone once `pinned` returns. Return a value, or a frame that is
+    * itself materialized (written, collected or checkpointed) inside
+    * `body`. The release unpersists the checkpoint's own RDD:
+    * `Dataset.unpersist` only drops cache-manager entries, and a local
+    * checkpoint is not one, so on a checkpointed frame it frees nothing.
+    */
+  def pinned[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = df.localCheckpoint(eager = true)
+    try body(p)
+    finally p.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+  }
 
   /** The one gate of every driver-local fast path (graph fixed points,
     * union-find, the ANN walk): `Some(rows)` when `df` fits the driver

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.Widen
+import graft.textops.{CdcChunker, LineDedup, NearDup, SpanDedup}
 
 /** Structured Streaming variants of the batch operators (SURVEY §7.4.8 —
   * an extension, not reference surface; the reference is batch-only).
@@ -13,6 +16,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - A1 request counts  -> windowed agg with watermark
   *  - W2-ish burst state -> `flatMapGroupsWithState` with event-time
   *    timeout (bounded state: one in-flight burst per key)
+  *
+  * The incremental-index ingest loops (near-dup, fingerprint, span,
+  * CDC, line-clean, ANN) keep no streaming state: the corpus lives in a
+  * persisted index, bounded by disk, and each batch's shuffle is sized
+  * by the batch. They share one replay-safe protocol, written once on
+  * [[pinnedIngest]]: the index ledger drops replayed ids, the batch is
+  * pinned before the index mutates, the sink runs before the append,
+  * and the pins are released on every exit. Each returns the configured
+  * writer; the caller sets checkpoint/trigger and calls `start()`.
   */
 object StreamingOps {
 
@@ -218,180 +230,130 @@ object StreamingOps {
     matched.union(nullTimeLefts)
   }
 
+  /** The one micro-batch body of the pinned ingest loops
+    * ([[dedupIngest]], [[dedupIngestFingerprints]], [[spanDedupIngest]],
+    * [[cdcChunkIngest]], [[annIngest]]). Per batch it pins the batch,
+    * pins `survivors(batch)`, hands the survivors to `sink`, then calls
+    * `append(batch, survivors)`, and releases both pins on every exit
+    * ([[graft.operators.Widen.pinned]]).
+    *
+    * Pin before append: the survivors plan reads the index (the
+    * ledger's replay anti-join, a near-dup probe) and `append` MUTATES
+    * it, so a lazy frame re-evaluated by the sink after the append
+    * would anti-join away the ids it just appended and hand the sink
+    * an empty batch. The batch pin also evaluates the stream's per-row
+    * expressions (shingles, an image fingerprint) once for every
+    * consumer.
+    *
+    * Sink before append: a sink failure replays the batch with the
+    * index unchanged, so the batch re-survives and is re-delivered
+    * (standard foreachBatch at-least-once: make the sink idempotent on
+    * `batchId`). Appending first would let the replay's anti-join drop
+    * the batch and hand the sink nothing, silently losing rows the
+    * index already holds. A crash between sink and append re-delivers
+    * and THEN appends, covered by the same idempotent-sink contract.
+    *
+    * Release on every exit: a transiently failing sink would otherwise
+    * leak both checkpoint block sets on every replayed batch until
+    * executor storage degrades the stream.
+    */
+  private def pinnedIngest(stream: DataFrame, sink: (DataFrame, Long) => Unit)(
+      survivors: DataFrame => DataFrame)(
+      append: (DataFrame, DataFrame) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+      Widen.pinned(batch.toDF()) { pinned =>
+        Widen.pinned(survivors(pinned)) { out =>
+          sink(out, batchId)
+          append(pinned, out)
+        }
+      }
+    }
+
   /** Continuous-crawl near-dup ingestion: each micro-batch is deduped
     * in-batch and against the persisted minhash index
-    * ([[graft.textops.NearDup.dedupNewBatch]]); the survivors are
-    * appended to the index
-    * ([[graft.textops.NearDup.appendToMinhashIndex]]) — so the NEXT
-    * batch dedups against them — and handed to `sink`.
-    *
-    * Streaming STATE is empty by construction: the corpus lives in the
-    * parquet index, bounded by disk rather than the state store, and
-    * each batch's shuffle is sized by the batch (the incremental-index
-    * contract). Failure/replay: the SINK runs BEFORE the append — a
-    * sink failure replays the batch with the index unchanged, so the
-    * batch re-survives and is re-delivered (standard foreachBatch
-    * at-least-once — make the sink idempotent on `batchId`); appending
-    * first would let the replay's id anti-join drop the batch and hand
-    * the sink nothing, silently losing delivered-to-index docs. A crash
-    * between sink and append re-delivers and THEN appends — covered by
-    * the same idempotent-sink contract. The batch is shingled ONCE: a
-    * materialized (rows + shingle column) frame feeds in-batch pair
-    * gen, the index probe, and the append through the prepared cores —
-    * a lazy plan would re-run the text scan at every consuming
-    * exchange, and the corpus side is never re-shingled at all (the
-    * incremental-index contract). Returns the configured writer; the
-    * caller sets checkpoint/trigger and calls `start()`.
+    * ([[graft.textops.NearDup.dedupNewBatch]]), handed to `sink`, and
+    * appended to the index so the NEXT batch dedups against it
+    * ([[pinnedIngest]]'s protocol). The batch is shingled ONCE, on
+    * the stream before the pin: the pinned (rows + shingle column)
+    * frame feeds in-batch pair gen, the index probe and the append,
+    * and the corpus side is never re-shingled at all. The sink gets
+    * the survivors without the shingle column.
     */
   def dedupIngest(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String,
       sink: (DataFrame, Long) => Unit,
       shingleSize: Int = 3, k: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5, maxBucketSize: Long = 100)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // EAGER localCheckpoint: the survivors plan reads the index
-        // (anti-join on already-ingested ids, near-dup probe), and the
-        // append below MUTATES that index — a lazy frame re-evaluated
-        // by the sink after the append would anti-join away the ids it
-        // just appended and hand the sink an empty batch. Materialize
-        // once, before the index changes; both consumers read the
-        // pinned result.
-        import graft.textops.NearDup
-        // shingle once, eagerly: every downstream stage slices this
-        // materialized frame instead of re-scanning the text
-        val withSh = batch.toDF()
-          .withColumn(NearDup.ShCol,
-            NearDup.hashedShingles(org.apache.spark.sql.functions.col(textCol), shingleSize))
-          .localCheckpoint(true)
-        // unpersist in finally: a transiently-failing sink would
-        // otherwise leak BOTH checkpoint block sets on every replayed
-        // batch until executor storage degrades the stream
-        try {
-          val survivors = NearDup.dedupNewBatchPrepared(
-            withSh, idCol, indexDir, k, bands, threshold, maxBucketSize)
-            .localCheckpoint(true)
-          try {
-            // sink FIRST: if it fails, the replay sees an unchanged index
-            // and re-delivers — at-least-once holds. Append-first would
-            // make the replay anti-join away its own batch (delivered to
-            // the index, lost to the sink).
-            sink(survivors.drop(NearDup.ShCol), batchId)
-            NearDup.writeMinhashIndexFromShingles(
-              survivors.select(
-                org.apache.spark.sql.functions.col(idCol).as("id"),
-                org.apache.spark.sql.functions.col(NearDup.ShCol).as("sh")),
-              indexDir, k, bands, "append")
-          } finally { survivors.unpersist(); () }
-        } finally { withSh.unpersist(); () }
-        ()
+      threshold: Double = 0.5, maxBucketSize: Long = 100): DataStreamWriter[Row] = {
+    pinnedIngest(
+      docs.withColumn(NearDup.ShCol, NearDup.hashedShingles(col(textCol), shingleSize)),
+      (out, batchId) => sink(out.drop(NearDup.ShCol), batchId))(
+      NearDup.dedupNewBatchPrepared(_, idCol, indexDir, k, bands, threshold, maxBucketSize)) {
+      (_, out) =>
+        NearDup.writeMinhashIndexFromShingles(
+          out.select(col(idCol).as("id"), col(NearDup.ShCol).as("sh")),
+          indexDir, k, bands, "append")
     }
+  }
 
   /** Streaming incremental near-dup ingestion for the FINGERPRINT
-    * (image) family — [[dedupIngest]]'s shape over
-    * [[graft.textops.NearDup.dedupNewFingerprintBatch]]: each batch
-    * drops replays (index ids), in-batch near-dups, and near-dups of
+    * (image) family: [[dedupIngest]]'s shape over
+    * [[graft.textops.NearDup.dedupNewFingerprintBatch]]. Each batch
+    * drops replays (index ids), in-batch near-dups and near-dups of
     * the persisted corpus, delivers the survivors to `sink`, then
     * appends them so the NEXT batch sees them. The stream frame must
     * already carry the fingerprint column (e.g.
-    * `withColumn("fp", PerceptualHash.dhash64(col("bytes")))`) — it is
-    * computed ONCE per batch via the eager checkpoint. Sink-first
-    * ordering keeps at-least-once on replay (see [[dedupIngest]]).
+    * `withColumn("fp", PerceptualHash.dhash64(col("bytes")))`); the
+    * batch pin computes it once per batch.
     */
   def dedupIngestFingerprints(
       media: DataFrame, idCol: String, fpCol: String, indexDir: String,
       sink: (DataFrame, Long) => Unit,
-      maxHamming: Int = 3, maxBucketSize: Long = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.textops.NearDup
-        // eager checkpoints for the same two reasons as dedupIngest:
-        // the fingerprint expression (an image decode) runs once, and
-        // the survivors are pinned BEFORE the append mutates the index
-        val pinned = batch.toDF().localCheckpoint(true)
-        // unpersist in finally — same leak-on-retry argument as
-        // dedupIngest above
-        try {
-          val survivors = NearDup.dedupNewFingerprintBatch(
-            pinned, idCol, fpCol, indexDir, maxHamming, maxBucketSize)
-            .localCheckpoint(true)
-          try {
-            sink(survivors, batchId)
-            NearDup.appendToFingerprintIndex(survivors, idCol, fpCol, indexDir)
-          } finally { survivors.unpersist(); () }
-        } finally { pinned.unpersist(); () }
-        ()
+      maxHamming: Int = 3, maxBucketSize: Long = 0): DataStreamWriter[Row] = {
+    pinnedIngest(media, sink)(
+      NearDup.dedupNewFingerprintBatch(_, idCol, fpCol, indexDir, maxHamming, maxBucketSize)) {
+      (_, out) => NearDup.appendToFingerprintIndex(out, idCol, fpCol, indexDir)
     }
+  }
 
-  /** Streaming incremental SUBSTRING dedup — the span family's
-    * ingestion loop ([[dedupIngest]]'s shape over
-    * [[graft.textops.SpanDedup.dedupSpansNewBatch]]): each batch drops
-    * replayed ids, trims in-batch duplicate spans AND spans already
-    * seen in history, delivers the trimmed rows to `sink`, then
-    * appends the batch's ids + window hashes so the next batch sees
-    * them. Sink-first keeps at-least-once; the ledger-first append
-    * order inside [[graft.textops.SpanDedup.appendToSpanIndex]] keeps
-    * replays no-ops. Batch ids must ascend across batches.
+  /** Streaming incremental SUBSTRING dedup, the span family's
+    * ingestion loop over [[graft.textops.SpanDedup.dedupSpansNewBatch]]:
+    * each batch drops replayed ids, trims in-batch duplicate spans AND
+    * spans already seen in history, delivers the trimmed rows to
+    * `sink`, then appends the batch's ids + window hashes so the next
+    * batch sees them. The ledger-first append order inside
+    * [[graft.textops.SpanDedup.appendToSpanIndex]] keeps replays
+    * no-ops. Batch ids must ascend across batches.
     */
   def spanDedupIngest(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      sink: (DataFrame, Long) => Unit, k: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.textops.SpanDedup
-        val pinned = batch.toDF().localCheckpoint(true)
-        try {
-          val out = SpanDedup.dedupSpansNewBatch(
-            pinned, idCol, textCol, indexDir, k).localCheckpoint(true)
-          try {
-            sink(out, batchId)
-            // append the FRESH rows' ORIGINAL text (history must hold
-            // every window seen, including ones trimmed from the
-            // output): out carries exactly the fresh ids
-            SpanDedup.appendToSpanIndex(
-              pinned.join(out.select(org.apache.spark.sql.functions.col(idCol)),
-                Seq(idCol), "left_semi"),
-              idCol, textCol, indexDir, k)
-          } finally { out.unpersist(); () }
-        } finally { pinned.unpersist(); () }
-        ()
+      sink: (DataFrame, Long) => Unit, k: Int = 8): DataStreamWriter[Row] = {
+    pinnedIngest(docs, sink)(SpanDedup.dedupSpansNewBatch(_, idCol, textCol, indexDir, k)) {
+      (pinned, out) =>
+        // append the FRESH rows' ORIGINAL text (history must hold
+        // every window seen, including ones trimmed from the
+        // output): out carries exactly the fresh ids
+        SpanDedup.appendToSpanIndex(
+          pinned.join(out.select(col(idCol)), Seq(idCol), "left_semi"),
+          idCol, textCol, indexDir, k)
     }
+  }
 
   /** Streaming CDC storage-dedup loop: each micro-batch chunks its
     * docs, reports per-doc dedup accounting against EVERYTHING
     * ingested so far ([[graft.textops.CdcChunker.dedupStatsAgainstIndex]]
-    * — the restic/borg per-backup ratio), then appends its novel
-    * chunk hashes. Sink BEFORE append (the [[lineCleanIngest]] replay
-    * rule): a replayed batch reports against the same history and the
-    * ledger drops its re-append. StreamingOpsSpec pins the
-    * batch-sequence stats equal to batch-by-batch recomputation
+    * — the restic/borg per-backup ratio) to `sink`, then appends its
+    * novel chunk hashes. A replayed batch reports against the same
+    * history and the ledger drops its re-append. StreamingOpsSpec pins
+    * the batch-sequence stats equal to batch-by-batch recomputation
     * against the union of previous batches.
     */
   def cdcChunkIngest(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import graft.textops.CdcChunker
-        // eager checkpoint: the append mutates the index the stats
-        // plan reads — pin the batch so sink and append see one state
-        val pinned = batch.toDF().localCheckpoint(true)
-        try {
-          // stats pinned too: the append below mutates the index the
-          // stats plan reads lazily
-          val stats = CdcChunker.dedupStatsAgainstIndex(
-            pinned, idCol, textCol, indexDir).localCheckpoint(true)
-          try {
-            sink(stats, batchId)
-            CdcChunker.appendToChunkIndex(pinned, idCol, textCol, indexDir)
-          } finally { stats.unpersist(); () }
-        } finally { pinned.unpersist(); () }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    pinnedIngest(docs, sink)(CdcChunker.dedupStatsAgainstIndex(_, idCol, textCol, indexDir)) {
+      (pinned, _) => CdcChunker.appendToChunkIndex(pinned, idCol, textCol, indexDir)
     }
+  }
 
   final case class BurstKey(source: String, ip: String, request_uri: String)
   final case class BurstEvent(source: String, ip: String, request_uri: String,
@@ -560,29 +522,19 @@ object StreamingOps {
     * cleaned against the hot-line set AS OF THE PREVIOUS batches (a
     * line becomes boilerplate only once history proves it — the
     * incremental-index contract), delivered to `sink`, then appended
-    * to the index so the NEXT batch counts it. Sink-first ordering
-    * keeps at-least-once on replay, and the index append itself drops
-    * replayed batches via the ingestion ledger (see [[dedupIngest]] —
-    * the same discipline; make the sink idempotent on `batchId`).
-    * Returns the configured writer; the caller sets
-    * checkpoint/trigger and calls `start()`.
+    * to the index so the NEXT batch counts it. [[pinnedIngest]]'s
+    * protocol with the batch pin only: the cleaned frame has one
+    * consumer, the sink, which runs before the append, and the index
+    * append itself drops replayed batches via the ingestion ledger.
     */
   def lineCleanIngest(
       docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      minDf: Long, sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // eager checkpoint: the append below mutates the index the
-        // cleaning plan reads; materialize the batch once, before the
-        // mutation, so sink and append see the same pinned rows
-        val b = batch.toDF().localCheckpoint(true)
-        try {
-          sink(graft.textops.LineDedup.cleanAgainstLineIndex(
-            b, idCol, textCol, indexDir, minDf), batchId)
-          graft.textops.LineDedup.appendToLineIndex(b, idCol, textCol, indexDir)
-        } finally { b.unpersist(); () }
-        ()
+      minDf: Long, sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    docs.writeStream.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        Widen.pinned(batch.toDF()) { b =>
+        sink(LineDedup.cleanAgainstLineIndex(b, idCol, textCol, indexDir, minDf), batchId)
+        LineDedup.appendToLineIndex(b, idCol, textCol, indexDir)
+      }
     }
 
   /** Streaming corpus statistics — continuous ingest monitoring with
@@ -645,15 +597,13 @@ object StreamingOps {
     * protection), delivers the survivors to `sink`, appends their
     * vectors to the store and their cell assignments to the persisted
     * IVF index — the NEXT batch (and any [[annIngestSearch]]) sees
-    * them. Streaming STATE is empty; the corpus lives on disk bounded
-    * by data, not the state store.
+    * them ([[pinnedIngest]]'s protocol).
     *
-    * Failure/replay ordering: sink FIRST (at-least-once with an
-    * idempotent sink, the dedupIngest contract), then vectors —
-    * idempotently, via an id anti-join against the store — then the
-    * assignment append. A crash after the vectors write replays into
-    * a re-sink + skipped vector append + assignment append; there is
-    * no order in which a replayed id double-lands in either store.
+    * Append order: vectors — idempotently, via an id anti-join against
+    * the store — then the assignment append. A crash after the vectors
+    * write replays into a re-sink + skipped vector append + assignment
+    * append; there is no order in which a replayed id double-lands in
+    * either store.
     *
     * `compactAboveFiles > 0` bounds steady-state file counts: after a
     * batch commits, if either store exceeds the threshold it folds
@@ -664,55 +614,41 @@ object StreamingOps {
   def annIngest(
       vecs: DataFrame, idCol: String, vecCol: String, dir: String,
       sink: (DataFrame, Long) => Unit,
-      compactAboveFiles: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // EAGER pin: the survivors plan anti-joins the index, and the
-        // appends below MUTATE it (the dedupIngest rationale)
-        val pinned = batch.toDF().localCheckpoint(true)
-        try {
-          val known = spark.read.parquet(s"$dir/cells.parquet")
-            .select(col("id").as("_an_known"))
-          val fresh = pinned.join(
-            known, pinned(idCol) === col("_an_known"), "left_anti")
-            .localCheckpoint(true)
-          try {
-            sink(fresh, batchId)
-            val stored = spark.read.parquet(s"$dir/vectors.parquet")
-              .select(col("id").as("_an_stored"))
-            fresh.select(col(idCol).as("id"), col(vecCol).as("vec"))
-              .join(stored, col("id") === col("_an_stored"), "left_anti")
-              .write.mode("append").parquet(s"$dir/vectors.parquet")
-            graft.vector.Ivf.appendToIndex(fresh, idCol, vecCol, dir)
-            // steady-state file-count bound: per-batch appends accrete
-            // one file set per batch; above the threshold, fold the
-            // assignment index (tombstone-applying compact) and the
-            // vector store (row-preserving coalesce) back down. Runs
-            // AFTER the batch commits — a crash mid-compact replays
-            // into a no-op batch plus a re-compact.
-            if (compactAboveFiles > 0) {
-              def files(p: String): Int = {
-                val hp = new org.apache.hadoop.fs.Path(p)
-                val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-                if (!fs.exists(hp)) 0
-                else fs.listStatus(hp).count(s =>
-                  s.isFile && s.getPath.getName.endsWith(".parquet"))
-              }
-              if (files(s"$dir/cells.parquet") > compactAboveFiles)
-                graft.vector.Ivf.compactIndex(spark, dir)
-              if (files(s"$dir/vectors.parquet") > compactAboveFiles) {
-                val rows = spark.read.parquet(s"$dir/vectors.parquet").count()
-                graft.operators.StorageLayout.compactSmallFiles(
-                  spark, s"$dir/vectors.parquet",
-                  targetRowsPerFile = math.max(1L, rows / 4))
-              }
-            }
-          } finally { fresh.unpersist(); () }
-        } finally { pinned.unpersist(); () }
-        ()
+      compactAboveFiles: Int = 0): DataStreamWriter[Row] = {
+    val spark = vecs.sparkSession
+    pinnedIngest(vecs, sink) { pinned =>
+      val known = spark.read.parquet(s"$dir/cells.parquet").select(col("id").as("_an_known"))
+      pinned.join(known, pinned(idCol) === col("_an_known"), "left_anti")
+    } { (_, fresh) =>
+      val vectors = fresh.select(col(idCol).as("id"), col(vecCol).as("vec"))
+      graft.operators.IndexOps.unledgered(vectors, "id", s"$dir/vectors.parquet")
+        .getOrElse(vectors).write.mode("append").parquet(s"$dir/vectors.parquet")
+      graft.vector.Ivf.appendToIndex(fresh, idCol, vecCol, dir)
+      // steady-state file-count bound: per-batch appends accrete
+      // one file set per batch; above the threshold, fold the
+      // assignment index (tombstone-applying compact) and the
+      // vector store (row-preserving coalesce) back down. Runs
+      // AFTER the batch commits — a crash mid-compact replays
+      // into a no-op batch plus a re-compact.
+      if (compactAboveFiles > 0) {
+        def files(p: String): Int = {
+          val hp = new org.apache.hadoop.fs.Path(p)
+          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (!fs.exists(hp)) 0
+          else fs.listStatus(hp).count(s =>
+            s.isFile && s.getPath.getName.endsWith(".parquet"))
+        }
+        if (files(s"$dir/cells.parquet") > compactAboveFiles)
+          graft.vector.Ivf.compactIndex(spark, dir)
+        if (files(s"$dir/vectors.parquet") > compactAboveFiles) {
+          val rows = spark.read.parquet(s"$dir/vectors.parquet").count()
+          graft.operators.StorageLayout.compactSmallFiles(
+            spark, s"$dir/vectors.parquet",
+            targetRowsPerFile = math.max(1L, rows / 4))
+        }
+      }
     }
+  }
 
   /** Search the [[annIngest]]-grown index: the persisted-index path
     * over the persisted vector store.
@@ -736,8 +672,7 @@ object StreamingOps {
     * ([[graft.operators.TableLog.create]] a seed or empty-schema
     * frame first).
     */
-  def tableLogSink(rows: DataFrame, path: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  def tableLogSink(rows: DataFrame, path: String): DataStreamWriter[Row] =
     tableLogSink(rows, path, compactAboveFiles = 0, targetRowsPerFile = 0L)
 
   /** [[tableLogSink]] with steady-state file-count maintenance: after
@@ -753,12 +688,11 @@ object StreamingOps {
     */
   def tableLogSink(
       rows: DataFrame, path: String,
-      compactAboveFiles: Int, targetRowsPerFile: Long)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      compactAboveFiles: Int, targetRowsPerFile: Long): DataStreamWriter[Row] = {
     require(compactAboveFiles == 0 || targetRowsPerFile > 0,
       "tableLogSink: compaction needs a positive targetRowsPerFile")
     rows.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
           graft.operators.TableLog.appendBatch(
@@ -787,10 +721,10 @@ object StreamingOps {
     * bytes at maintenance time. Requires one row per key per batch
     * (dedupe upstream — e.g. `dropDuplicates` within the batch).
     */
-  def tableLogUpsertSink(rows: DataFrame, path: String, keyCols: Seq[String])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  def tableLogUpsertSink(
+      rows: DataFrame, path: String, keyCols: Seq[String]): DataStreamWriter[Row] =
     rows.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      (batch: Dataset[Row], batchId: Long) =>
         graft.operators.TableLog.upsertBatch(
           batch.sparkSession, path, batch.toDF(), keyCols, s"batch-$batchId")
         ()

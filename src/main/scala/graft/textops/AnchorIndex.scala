@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.IndexOps
+import graft.operators.{IndexOps, Widen}
 
 /** Incremental anchor-text/link index (round-10 verdict item 8): q140
   * recomputes per-dst-host anchor aggregates from scratch every run;
@@ -65,16 +65,15 @@ object AnchorIndex {
       val spark = links.sparkSession
       val ledger = IndexOps.dropTombstoned(
         spark, dir, spark.read.parquet(idsPath(dir)), "id")
-      val fresh = links
+      val unseen = links
         .withColumn("_ai_id", col(idCol).cast("long"))
         .join(ledger.select(col("id").as("_ai_id")), Seq("_ai_id"), "left_anti")
         .drop("_ai_id")
-        .localCheckpoint(true)
-      try {
+      Widen.pinned(unseen) { fresh =>
         fresh.select(col(idCol).cast("long").as("id")).distinct()
           .write.mode("append").parquet(idsPath(dir))
         reduced(fresh, idCol).write.mode("append").parquet(linksPath(dir))
-      } finally { fresh.unpersist(); () }
+      }
     }
 
   /** Tombstone re-fetched/retracted docs — O(batch), honored by every

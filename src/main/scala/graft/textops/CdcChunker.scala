@@ -243,16 +243,6 @@ object CdcChunker {
   // repeats of a novel hash count as new (first-batch cost); history
   // dedups across batches.
 
-  private def antiLedger(df: DataFrame, idCol: String, dir: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$dir/ids.parquet")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) df
-    else df.join(
-      spark.read.parquet(s"$dir/ids.parquet")
-        .select(col("id").cast("long").as(idCol)),
-      Seq(idCol), "left_anti")
-  }
-
   private def writeChunkBatch(df: DataFrame, idCol: String, textCol: String,
       dir: String, w: Int, d: Long, r: Long, mode: String): Unit = {
     df.select(col(idCol).cast("long").as("id")).distinct()
@@ -275,10 +265,10 @@ object CdcChunker {
       dir: String, w: Int = 8, divisor: Long = 64, remainder: Long = 5): Unit =
     graft.operators.IndexOps.withMutationLock(
       df.sparkSession, dir, "append-cdc") {
-      val fresh = antiLedger(df, idCol, dir).localCheckpoint(true)
-      try writeChunkBatch(fresh, idCol, textCol, dir, w, divisor, remainder,
-        "append")
-      finally { fresh.unpersist(); () }
+      val fresh = graft.operators.IndexOps.unledgered(
+        df, idCol, s"$dir/ids.parquet", castLong = true).getOrElse(df)
+      graft.operators.Widen.pinned(fresh)(
+        writeChunkBatch(_, idCol, textCol, dir, w, divisor, remainder, "append"))
     }
 
   /** Known chunk hashes (empty frame when the index does not exist —

@@ -267,15 +267,16 @@ object LineDedup {
       .write.mode(mode).partitionBy("pb").parquet(s"$dir/counts.parquet")
   }
 
-  private def antiLedger(df: DataFrame, idCol: String, dir: String,
-      ledger: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$ledger")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) df
-    else df.join(
-      spark.read.parquet(s"$dir/$ledger").select(col("id").cast("long").as(idCol)),
-      Seq(idCol), "left_anti")
-  }
+  /** `df` minus the docs already in `ledger`, pinned: the anti-join
+    * reads the ledger lazily, so an unpinned frame re-evaluated for the
+    * delta write would see its own just-appended ids and write zero
+    * deltas.
+    */
+  private def writeUnledgered(df: DataFrame, idCol: String, textCol: String,
+      dir: String, ledger: String, sign: Long): Unit =
+    graft.operators.Widen.pinned(graft.operators.IndexOps.unledgered(
+      df, idCol, s"$dir/$ledger", castLong = true).getOrElse(df))(
+      writeLineBatch(_, idCol, textCol, dir, ledger, sign, "append"))
 
   /** Create a line-frequency index from an initial corpus (clearing
     * any stale removal ledger a previous index at `dir` left behind).
@@ -295,12 +296,7 @@ object LineDedup {
   def appendToLineIndex(df: DataFrame, idCol: String, textCol: String,
       dir: String): Unit =
     graft.operators.IndexOps.withMutationLock(df.sparkSession, dir, "append-lines") {
-      // materialize BEFORE the ledger write: the anti-join plan reads
-      // ids.parquet lazily, so an unmaterialized frame re-evaluated for
-      // the delta write would see its own just-appended ids and write
-      // zero deltas
-      val fresh = antiLedger(df, idCol, dir, "ids.parquet").localCheckpoint(true)
-      writeLineBatch(fresh, idCol, textCol, dir, "ids.parquet", 1L, "append")
+      writeUnledgered(df, idCol, textCol, dir, "ids.parquet", 1L)
     }
 
   /** Remove docs (takedowns/re-crawls): appends -1 deltas for each
@@ -316,10 +312,7 @@ object LineDedup {
       val inIndex = df.join(
         df.sparkSession.read.parquet(s"$dir/ids.parquet")
           .select(col("id").cast("long").as(idCol)), Seq(idCol), "left_semi")
-      // same materialize-before-ledger-write rule as appendToLineIndex
-      val fresh = antiLedger(inIndex, idCol, dir, "removed.parquet")
-        .localCheckpoint(true)
-      writeLineBatch(fresh, idCol, textCol, dir, "removed.parquet", -1L, "append")
+      writeUnledgered(inIndex, idCol, textCol, dir, "removed.parquet", -1L)
     }
 
   /** Current (line-hash, document-frequency) view: delta sums, zero

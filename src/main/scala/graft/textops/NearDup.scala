@@ -357,22 +357,17 @@ object NearDup {
       threshold: Double = 0.5, maxBucketSize: Long = 100): DataFrame = {
     require(dfSh.columns.contains(ShCol),
       s"dedupNewBatchPrepared: frame must carry the $ShCol shingle column")
-    val spark = dfSh.sparkSession
     def shOf(d: DataFrame) = d.select(col(idCol).as("id"), col(ShCol).as("sh"))
     // probe the LEDGER (shingles.parquet): it is written first and
     // holds every ingested id, short docs included — the file the
     // replay anti-join reads must be the file whose existence gates it
-    val p = new org.apache.hadoop.fs.Path(s"$dir/shingles.parquet")
-    val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    val fresh =
-      if (!exists) dfSh
-      else dfSh.join(
-        spark.read.parquet(s"$dir/shingles.parquet").select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+    val unledgered =
+      graft.operators.IndexOps.unledgered(dfSh, idCol, s"$dir/shingles.parquet")
+    val fresh = unledgered.getOrElse(dfSh)
     val inEdges = minhashPairsFromShingles(
       shOf(fresh), k, bands, threshold, maxBucketSize).select("id_a", "id_b")
     val local = graft.operators.Dedup.dropNearDups(fresh, idCol, inEdges)
-    if (!exists) local
+    if (unledgered.isEmpty) local
     else {
       val dupIds = minhashAgainstIndexFromShingles(
         shOf(local), dir, k, bands, threshold, maxBucketSize)
@@ -644,18 +639,12 @@ object NearDup {
   def dedupNewFingerprintBatch(
       df: DataFrame, idCol: String, fpCol: String, dir: String,
       maxHamming: Int = 3, maxBucketSize: Long = 0): DataFrame = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$dir/fp.parquet")
-    val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    val fresh =
-      if (!exists) df
-      else df.join(
-        spark.read.parquet(s"$dir/fp.parquet").select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+    val unledgered = graft.operators.IndexOps.unledgered(df, idCol, s"$dir/fp.parquet")
+    val fresh = unledgered.getOrElse(df)
     val inEdges = fingerprintPairs(fresh, idCol, fpCol, maxHamming, maxBucketSize)
       .select("id_a", "id_b")
     val local = graft.operators.Dedup.dropNearDups(fresh, idCol, inEdges)
-    if (!exists) local
+    if (unledgered.isEmpty) local
     else {
       val dupIds = fingerprintPairsAgainstIndex(
         local, idCol, fpCol, dir, maxHamming, maxBucketSize)

@@ -655,14 +655,8 @@ object SpanDedup {
       dir: String, k: Int = 8): DataFrame = {
     require(k >= 2, s"dedupSpansNewBatch: k must be >= 2 (got $k)")
     val spark = df.sparkSession
-    val ledgerPath = new org.apache.hadoop.fs.Path(s"$dir/ids.parquet")
-    val exists = ledgerPath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ledgerPath)
-    val fresh =
-      if (!exists) df
-      else df.join(
-        spark.read.parquet(s"$dir/ids.parquet").select(col("id").as(idCol)),
-        Seq(idCol), "left_anti")
+    val unledgered = graft.operators.IndexOps.unledgered(df, idCol, s"$dir/ids.parquet")
+    val fresh = unledgered.getOrElse(df)
     val base = fresh.select(col(idCol).as("_sd_id"),
       lower(coalesce(col(textCol), lit(""))).as("_sd_txt"))
     val occ = base.select(col("_sd_id"),
@@ -675,7 +669,7 @@ object SpanDedup {
       .filter(col("_sd_id") > col("_first_id") ||
         (col("_sd_id") === col("_first_id") && col("_pos") > col("_first_pos")))
       .select(col("_sd_id"), col("_pos"))
-    val dups = if (!exists) inBatch else {
+    val dups = if (unledgered.isEmpty) inBatch else {
       val winPath = new org.apache.hadoop.fs.Path(s"$dir/windows.parquet")
       val winExists = winPath
         .getFileSystem(spark.sparkContext.hadoopConfiguration).exists(winPath)

@@ -731,12 +731,11 @@ object GraphAnn {
     val spark = newRows.sparkSession
     graft.operators.IndexOps.withMutationLock(spark, dir, "append-graph") {
       val ledger = spark.read.parquet(s"$dir/ids.parquet")
-      val fresh = newRows
+      val unseen = newRows
         .withColumn("_ga_id", col(idCol).cast("long"))
         .join(ledger.select(col("id").as("_ga_id")), Seq("_ga_id"), "left_anti")
         .drop("_ga_id")
-        .localCheckpoint(true)
-      try {
+      graft.operators.Widen.pinned(unseen) { fresh =>
         if (fresh.isEmpty) ()
         else {
           val centroids = Ivf.loadCentroids(spark, dir)
@@ -768,7 +767,7 @@ object GraphAnn {
                 .write.mode("overwrite").parquet(freshPath)
           }
         }
-      } finally { fresh.unpersist(); () }
+      }
     }
   }
 

@@ -1,10 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerInterop
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.LocalSpark
@@ -44,4 +49,27 @@ abstract class GraftSparkSpec extends AnyFunSuite {
       n.get
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** `f` of every query run while `body` runs (its action name and
+    * execution), concatenated. */
+  protected def queriesDuring[T](f: (String, QueryExecution) => Seq[T])(body: => Unit): Seq[T] = {
+    val found = new ConcurrentLinkedQueue[T]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        f(funcName, qe).foreach(found.add)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    found.asScala.toSeq
+  }
+
+  /** Column names of every frame `localCheckpoint`ed while `body` runs. */
+  protected def checkpointedDuring(body: => Unit): Seq[Seq[String]] =
+    queriesDuring { (funcName, qe) =>
+      if (funcName == "localCheckpoint") Seq(qe.analyzed.output.map(_.name)) else Nil
+    }(body)
 }

@@ -1,21 +1,18 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.GraftListenerInterop
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Expression, Lag, RowNumber}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
 
 import graft.cli.GoldenTableSpec
+import graft.norm.Normalizer
+import graft.operators.Widen
 import graft.query.{FilterOptions, Filters}
 import graft.rules.RuleEngine
 import graft.sink.Renderer
@@ -124,23 +121,6 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     assert(norm32k <= norm8k * 5, s"4x the lines: $norm8k -> $norm32k")
   }
 
-  /** `f` of every query run while `body` runs (its action name and
-    * execution), concatenated. */
-  private def queriesDuring[T](f: (String, QueryExecution) => Seq[T])(body: => Unit): Seq[T] = {
-    val found = new ConcurrentLinkedQueue[T]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        f(funcName, qe).foreach(found.add)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    found.asScala.toSeq
-  }
-
   /** Input relations the file-source scans of every query run while
     * `body` runs read, one entry per scan: format plus root paths. */
   private def scansDuring(body: => Unit): Seq[String] =
@@ -191,9 +171,7 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
   test("stage: the store is written from the lazy normalized frame") {
     val dir = logDir(GoldenTableSpec.fixtureLines)
     val store = Files.createTempDirectory("graft_stage").resolve("store").toString
-    val checkpointed = queriesDuring { (funcName, qe) =>
-      if (funcName == "localCheckpoint") Seq(qe.analyzed.output.map(_.name)) else Nil
-    }(Pipeline.stage(spark, Seq(dir), store))
+    val checkpointed = checkpointedDuring(Pipeline.stage(spark, Seq(dir), store))
     // the parse result and the sessionizer's local ids are checkpointed,
     // the normalized frame (the one with request_count) is not
     assert(checkpointed.size == 2, checkpointed)
@@ -209,6 +187,13 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
       Pipeline.normalize(LogSources.parseLogs(spark, Seq(dir)).parsed)).getMessage
     val open = normalizeError
     val shut = unguarded(normalizeError)
+    // the eager check of a layered caller (Normalizer.withUtcTimestamp
+    // with strict = true over the deduplicated frame)
+    val eager = intercept[IllegalArgumentException] {
+      val parsed = LogSources.parseLogs(spark, Seq(dir)).parsed
+        .withColumn("_row_id", monotonically_increasing_id())
+      Normalizer.withUtcTimestamp(Normalizer.removeDuplicates(parsed, col("_row_id")))
+    }.getMessage
     val store = Files.createTempDirectory("graft_stage").resolve("store")
     val staged = intercept[IllegalArgumentException](
       Pipeline.stage(spark, Seq(dir), store.toString)).getMessage
@@ -216,6 +201,7 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     assert(open.contains("access.log:'21/Foo/2025:10:00:00 +0000'"), open)
     assert(open.contains("access.log:'32/Apr/2025:10:00:00 +0000'"), open)
     assert(shut == open)
+    assert(eager == open)
     assert(staged == open)
     assert(!Files.exists(store))
   }
@@ -229,6 +215,22 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     val unchecked = queries(Pipeline.Options(strictTimestamps = false))
     val checked = queries(Pipeline.Options())
     assert(checked == unchecked, s"queries: $unchecked unchecked, $checked checked")
+  }
+
+  test("pinned: one checkpoint job, released on return and on throw") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val n = Widen.pinned(spark.range(100).toDF()) { p =>
+      assert((persisted -- before).size == 1, "the pin holds one checkpoint")
+      p.count()
+    }
+    assert(n == 100L)
+    assert((persisted -- before).isEmpty, "released on return")
+    val jobs = countJobs(Widen.pinned(spark.range(100).toDF())(_ => ()))
+    assert(jobs == 1, s"jobs: $jobs")
+    intercept[IllegalStateException](
+      Widen.pinned(spark.range(10).toDF())(_ => throw new IllegalStateException("body failed")))
+    assert((persisted -- before).isEmpty, "released on throw")
   }
 
   /** A documents table of `(doc_id, text)` rows in a fresh dir, the

@@ -7,6 +7,24 @@ cd /root/repo
 echo "== sbt test =="
 sbt -batch test | grep -E 'Tests:|FAILED'
 
+echo "== pin scopes =="
+# a checkpoint that is released after use goes through
+# operators.Widen.pinned, which releases the checkpoint's own RDD
+# (Dataset.unpersist releases nothing on a local checkpoint); a
+# hand-written `finally { x.unpersist(); () }` under src/main fails here.
+# NgramLm's two `.cache()` scopes stay as they are: each is read by two
+# actions, and pinning it would checkpoint eagerly, one more job each.
+pins=$(grep -rnE 'finally \{ *[A-Za-z_][A-Za-z0-9_.]*\.unpersist\(\); *\(\) *\}' \
+  src/main/scala --include='*.scala' \
+  | grep -v '^src/main/scala/graft/operators/Widen\.scala:' \
+  | grep -vE '^src/main/scala/graft/textops/NgramLm\.scala:[0-9]+: +\} finally \{ counts\.unpersist\(\); \(\) \}$' \
+  || true)
+if [ -n "$pins" ]; then
+  echo "$pins"
+  echo "hand-written pin release: use operators.Widen.pinned" >&2
+  exit 1
+fi
+
 echo "== oracle gate sf0.001 =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/check_v1" > /dev/null 2>&1
 python3 tools/oracle_check.py /root/testdata/sf0.001 /tmp/check_v1
