@@ -463,20 +463,18 @@ object ScaleBench {
         (col("id") * 5L * (n / 1000L / 5L) + 2L).as("dst"))
         .localCheckpoint(true)
       val newE = de.unionByName(extra)
-      val prev = graft.operators.LinkGraph.pageRank(dn, "id", de, iters = 5)
-        .localCheckpoint(true)
-      val (fullXor, _) = timed(s"pr_delta_full_${n / 1000000}m",
-        graft.operators.LinkGraph.pageRank(dn, "id", newE, iters = 5))
-      val (deltaXor, _) = timed(s"pr_delta_incr_${n / 1000000}m",
-        graft.operators.LinkGraph.pageRankDelta(
-          dn, "id", newE, dn, de, prev, iters = 5,
-          knownDeltaEdges = Some(extra))
-          .select(col("id"), col("rank")))
+      val (fullXor, deltaXor) = graft.operators.Widen.pinned(
+          graft.operators.LinkGraph.pageRank(dn, "id", de, iters = 5)) { prev =>
+        (timed(s"pr_delta_full_${n / 1000000}m",
+          graft.operators.LinkGraph.pageRank(dn, "id", newE, iters = 5))._1,
+          timed(s"pr_delta_incr_${n / 1000000}m",
+            graft.operators.LinkGraph.pageRankDelta(dn, "id", newE, dn, de, prev,
+              iters = 5, knownDeltaEdges = Some(extra)).select(col("id"), col("rank")))._1)
+      }
       println(s"""{"bench":"scale","workload":"pr_delta_duel_match_${n / 1000000}m",""" +
         s""""match":${fullXor == deltaXor}}""")
       if (fullXor != deltaXor)
         throw new IllegalStateException("incremental pagerank duel diverged")
-      prev.unpersist()
     }
     } // end !skewOnly
 

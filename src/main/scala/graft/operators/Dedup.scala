@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
@@ -56,65 +58,70 @@ object Dedup {
     * (`label := label(label)`), so convergence is O(log longest-path)
     * rounds, not O(longest-path) — maxIter=50 covers paths of length
     * ~2^50. Each round is two shuffle-joins on the EDGE list / label
-    * frame, `localCheckpoint` truncates the growing lineage (previous
-    * rounds unpersisted as soon as superseded), and the loop
-    * early-stops when nothing changes. If the graph somehow fails to
-    * converge inside maxIter the call FAILS (an unconverged labeling
-    * under-merges components, which dropNearDups would silently turn
-    * into under-dropped duplicates).
+    * frame; [[Widen.iterate]] checkpoints each round's labels (which
+    * truncates the growing lineage), releases the round they replace,
+    * and stops the loop at the first round that changes nothing. If
+    * the graph somehow fails to converge inside maxIter the call FAILS
+    * (an unconverged labeling under-merges components, which
+    * dropNearDups would silently turn into under-dropped duplicates).
+    * The symmetric edge set is pinned for the call and released when
+    * it returns; the returned frame reads only the last round.
     */
   def connectedComponents(
       vertices: DataFrame,
       idCol: String,
       edges: DataFrame, // columns id_a, id_b
       maxIter: Int = 50): DataFrame = {
-    val sym = edges.select(col("id_a"), col("id_b"))
+    val symmetric = edges.select(col("id_a"), col("id_b"))
       .union(edges.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .distinct()
-      .localCheckpoint(true)
-    // Scale-adaptive small-graph path (opt guide §1.2 "choose the
-    // distributed algorithm"): when [[Widen.collectSmall]] admits the
-    // materialized edge set (its id_a < id_b half; sym is symmetric)
-    // and the vertex ids are integral too, a driver-side union-find
-    // gives the identical min-reachable-id labeling in one pass and ONE
-    // broadcast join back, instead of >= 2 label-propagation rounds of
-    // 2 shuffle joins + checkpoint + count each. Otherwise (the 100 TB
-    // near-dup graph) the loop below runs unchanged.
-    val local =
-      if (!Widen.integralIds(vertices, idCol)) None
-      else Widen.collectSmall(sym.filter(col("id_a") < col("id_b")), "id_a", "id_b")
-    if (local.isDefined) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
-        var c = x
-        while (parent.getOrDefault(c, c) != c) {
-          val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
-        }
-        r
+    Widen.pinned(symmetric) { sym =>
+      // Scale-adaptive small-graph path (opt guide §1.2 "choose the
+      // distributed algorithm"): when [[Widen.collectSmall]] admits the
+      // materialized edge set (its id_a < id_b half; sym is symmetric)
+      // and the vertex ids are integral too, a driver-side union-find
+      // gives the identical min-reachable-id labeling in one pass and ONE
+      // broadcast join back, instead of >= 2 label-propagation rounds of
+      // 2 shuffle joins + checkpoint + count each. Otherwise (the 100 TB
+      // near-dup graph) the loop below runs unchanged.
+      val local =
+        if (!Widen.integralIds(vertices, idCol)) None
+        else Widen.collectSmall(sym.filter(col("id_a") < col("id_b")), "id_a", "id_b")
+      local match {
+        case None => labelPropagation(vertices, idCol, sym, maxIter)
+        case Some(rows) =>
+          val parent = new java.util.HashMap[Long, Long]()
+          def find(x: Long): Long = {
+            var r = x
+            while (parent.getOrDefault(r, r) != r) r = parent.getOrDefault(r, r)
+            var c = x
+            while (parent.getOrDefault(c, c) != c) {
+              val nxt = parent.getOrDefault(c, c); parent.put(c, r); c = nxt
+            }
+            r
+          }
+          rows.foreach { row =>
+            val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+            if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+          }
+          val spark = vertices.sparkSession
+          import spark.implicits._
+          val mapped = parent.keySet.asScala.toSeq.map(k => (k, find(k)))
+            .toDF("_cc_id", "_cc_component")
+          val idT = vertices.schema(idCol).dataType
+          vertices.select(col(idCol).as("id"))
+            .join(broadcast(mapped), col("id").cast("long") === col("_cc_id"), "left")
+            .select(col("id"),
+              coalesce(col("_cc_component").cast(idT), col("id")).as("component"))
       }
-      local.get.foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      sym.unpersist()
-      val entries = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-      parent.keySet().forEach(k => entries += ((k, find(k))))
-      val spark = vertices.sparkSession
-      import spark.implicits._
-      val mapped = entries.toSeq.toDF("_cc_id", "_cc_component")
-      val idT = vertices.schema(idCol).dataType
-      return vertices.select(col(idCol).as("id"))
-        .join(broadcast(mapped), col("id").cast("long") === col("_cc_id"), "left")
-        .select(col("id"),
-          coalesce(col("_cc_component").cast(idT), col("id")).as("component"))
     }
-    var labels = vertices.select(col(idCol).as("id"), col(idCol).as("component"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+  }
+
+  /** [[connectedComponents]]' distributed route over the symmetric edges. */
+  private def labelPropagation(
+      vertices: DataFrame, idCol: String, sym: DataFrame, maxIter: Int): DataFrame = {
+    def round(state: DataFrame): DataFrame = {
+      val labels = state.drop("_changed")
       val nbrMin = sym
         .join(labels, sym("id_a") === labels("id"))
         .groupBy(sym("id_b").as("id"))
@@ -126,25 +133,21 @@ object Dedup {
       // pointer jump: component := label(component) — labels are vertex
       // ids, so the label frame doubles as the lookup table
       val compOf = prop.select(col("id").as("component"), col("component").as("_cc"))
-      val updated = prop
+      prop
         .join(compOf, Seq("component"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("_cc"), col("component"))).as("component"),
           col("_old"))
         .withColumn("_changed", col("component") < col("_old"))
         .drop("_old")
-        .localCheckpoint(true)
-      changed = updated.filter(col("_changed")).count()
-      val prev = labels
-      labels = updated.drop("_changed")
-      prev.unpersist()
-      iter += 1
     }
-    sym.unpersist()
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIter rounds — " +
-        "an unconverged labeling under-merges components; raise maxIter")
-    labels
+    Widen.iterate(
+      vertices.select(col(idCol).as("id"), col(idCol).as("component")),
+      Seq.fill(maxIter)(round _),
+      Some((_.filter(col("_changed")).count() == 0,
+        s"connectedComponents did not converge in $maxIter rounds — " +
+          "an unconverged labeling under-merges components; raise maxIter")))
+      .drop("_changed")
   }
 
   /** Near-dup drop: keep, per component of the pair graph, only the

@@ -26,14 +26,15 @@ import org.apache.spark.sql.types.DecimalType
   * standard practical choice for web-scale graphs (documented, and the
   * oracle states the same recurrence).
   *
-  * Scale shape: `deg` joins `edges` ONCE up front (one shuffle,
-  * localCheckpoint'ed); each iteration is one ranks-to-edges equi-join
-  * on src plus one (dst) hash aggregation with map-side partial
-  * combine — only (dst, contrib) pairs cross the second exchange. On a
-  * real cluster the checkpointed edge frame keeps its (src)
-  * partitioning across all iterations, so only the (small) rank frame
-  * moves. Lineage truncates per iteration ([[Dedup.connectedComponents]]'
-  * loop discipline).
+  * Scale shape: `deg` joins `edges` ONCE up front (one shuffle, the
+  * result pinned for the call by [[Widen.pinned]]); each iteration is
+  * one ranks-to-edges equi-join on src plus one (dst) hash aggregation
+  * with map-side partial combine — only (dst, contrib) pairs cross the
+  * second exchange. On a real cluster the checkpointed edge frame keeps
+  * its (src) partitioning across all iterations, so only the (small)
+  * rank frame moves. [[Widen.iterate]] checkpoints each iteration's
+  * ranks, which truncates the lineage, and releases the iteration they
+  * replace; the returned frame reads only the last one.
   *
   * Overflow: contributions avoid `r*dampNum` (which overflows a long
   * once total mass nears 2^63/dampNum — reachable at ~1e12 nodes via a
@@ -219,6 +220,7 @@ object LinkGraph {
           when(col("degree") >= 2,
             expr("(coalesce(n_triangles, 0L) * 20000) DIV (degree * (degree - 1))"))
             .otherwise(0L).as("coeff_x10000"))
+        // EAGER output: a lazy return would read `und` after its release
         .localCheckpoint(true)
     }
 
@@ -247,96 +249,87 @@ object LinkGraph {
       maxHops: Int = 50,
       knownDeltaEdges: Option[DataFrame] = None): DataFrame = {
     val ids = nodes.select(col(idCol).as("id"))
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    // multiset-exact edge diff (parallel-edge multiplicity changes
-    // change deg and contributions, so they MUST dirty their
-    // endpoints). The diff is the one graph-linear pass left in the
-    // delta path; a caller that already KNOWS its delta (a crawler's
-    // change feed) passes it via knownDeltaEdges and skips even that.
-    val deltaE = knownDeltaEdges.getOrElse {
-      val prevE = prevEdges.select(col("src"), col("dst"))
-      e.exceptAll(prevE).unionByName(prevE.exceptAll(e))
-    }
-    val dirty = deltaE.select(col("src").as("id"))
-      .unionByName(deltaE.select(col("dst").as("id")))
-      .unionByName(ids.exceptAll(prevNodes.select(col(idCol).as("id"))))
-      .unionByName(prevNodes.select(col(idCol).as("id")).exceptAll(ids))
-      .distinct()
-    // undirected closure from the dirty seeds (removed nodes drop out
-    // of the closure via the join against the NEW node set; their old
-    // neighbors entered `dirty` through the removed edges).
-    //
-    // Scale-adaptive small-graph path (the rankLoop/triangle
-    // discipline): when [[Widen.collectSmall]] admits the checkpointed
-    // edges and the seeds, the SAME seeded BFS runs as a driver loop —
-    // identical reached set — instead of maxHops rounds of
-    // join+distinct+anti-join, each behind a localCheckpoint and a
-    // count job. Otherwise the distributed closure below runs.
-    val localReached: Option[DataFrame] = for {
-      eRows <- Widen.collectSmall(e, "src", "dst")
-      seedRows <- Widen.collectSmall(dirty.join(ids, Seq("id")).distinct(), "id")
-    } yield {
-      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      eRows.foreach { r =>
-        val (s0, d0) = (r.getLong(0), r.getLong(1))
-        adj.computeIfAbsent(s0, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += d0
-        adj.computeIfAbsent(d0, _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += s0
-        ()
+    val unconverged = s"pageRankDelta: closure did not converge in $maxHops hops"
+    // pinned for the call: the diff, the closure and the sub-graph's
+    // rank loop read it; the returned frame reads only the checkpoints
+    // of the closure and of the rank loop
+    Widen.pinned(edges.select(col("src"), col("dst"))) { e =>
+      // multiset-exact edge diff (parallel-edge multiplicity changes
+      // change deg and contributions, so they MUST dirty their
+      // endpoints). The diff is the one graph-linear pass left in the
+      // delta path; a caller that already KNOWS its delta (a crawler's
+      // change feed) passes it via knownDeltaEdges and skips even that.
+      val deltaE = knownDeltaEdges.getOrElse {
+        val prevE = prevEdges.select(col("src"), col("dst"))
+        e.exceptAll(prevE).unionByName(prevE.exceptAll(e))
       }
-      val seen = new java.util.HashSet[Long]()
-      var front = seedRows.map(_.getLong(0)).toList
-      front.foreach(seen.add)
-      var hop0 = 0
-      while (front.nonEmpty && hop0 < maxHops) {
-        front = front.flatMap(u =>
-          Option(adj.get(u)).toList.flatten.filter(seen.add))
-        hop0 += 1
+      val dirty = deltaE.select(col("src").as("id"))
+        .unionByName(deltaE.select(col("dst").as("id")))
+        .unionByName(ids.exceptAll(prevNodes.select(col(idCol).as("id"))))
+        .unionByName(prevNodes.select(col(idCol).as("id")).exceptAll(ids))
+        .distinct()
+      // undirected closure from the dirty seeds (removed nodes drop out
+      // of the closure via the join against the NEW node set; their old
+      // neighbors entered `dirty` through the removed edges).
+      //
+      // Scale-adaptive small-graph path (the rankLoop/triangle
+      // discipline): when [[Widen.collectSmall]] admits the checkpointed
+      // edges and the seeds, the SAME seeded BFS runs as a driver loop —
+      // identical reached set — instead of up to maxHops rounds of
+      // join+distinct+anti-join, each behind a checkpoint and a count
+      // job. Otherwise the distributed closure below runs.
+      val localReached: Option[DataFrame] = for {
+        eRows <- Widen.collectSmall(e, "src", "dst")
+        seedRows <- Widen.collectSmall(dirty.join(ids, Seq("id")).distinct(), "id")
+      } yield {
+        val adj = eRows.toSeq.flatMap { r =>
+          Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0))
+        }.groupMap(_._1)(_._2)
+        var front = seedRows.map(_.getLong(0)).toList
+        val seen = scala.collection.mutable.HashSet(front: _*)
+        var hop0 = 0
+        while (front.nonEmpty && hop0 < maxHops) {
+          front = front.flatMap(u => adj.getOrElse(u, Nil).filter(seen.add))
+          hop0 += 1
+        }
+        require(front.isEmpty, unconverged)
+        val spark = nodes.sparkSession
+        import spark.implicits._
+        seen.toSeq.sorted.toDF("_prid")
+          .select(col("_prid").cast(nodes.schema(idCol).dataType).as("id"))
       }
-      require(front.isEmpty,
-        s"pageRankDelta: closure did not converge in $maxHops hops")
-      val spark = nodes.sparkSession
-      import spark.implicits._
-      val idT = nodes.schema(idCol).dataType
-      scala.jdk.CollectionConverters.SetHasAsScala(seen)
-        .asScala.toSeq.sorted.toDF("_prid")
-        .select(col("_prid").cast(idT).as("id"))
-    }
-    val reached = localReached.getOrElse {
-      // No distinct on undir: duplicate edges only re-propagate
-      // already-reached ids (the per-hop frontier distinct bounds
-      // growth) and the dedup shuffle would cost a full rank iteration
-      val undir = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint(true)
-      var reached0 = dirty.join(ids, Seq("id")).distinct().localCheckpoint(true)
-      var frontier = reached0
-      var hop = 0
-      var frontierSize = frontier.count()
-      while (frontierSize > 0 && hop < maxHops) {
-        val nbrs = undir.join(frontier, undir("src") === frontier("id"))
-          .select(col("dst").as("id")).distinct()
-        val fresh = nbrs.join(reached0, Seq("id"), "left_anti")
-          .localCheckpoint(true)
-        val prevReached = reached0
-        reached0 = reached0.unionByName(fresh).localCheckpoint(true)
-        prevReached.unpersist()
-        frontier.unpersist()
-        frontier = fresh
-        frontierSize = frontier.count()
-        hop += 1
+      val reached = localReached.getOrElse {
+        // No distinct on undir: duplicate edges only re-propagate
+        // already-reached ids (the per-hop frontier distinct bounds
+        // growth) and the dedup shuffle would cost a full rank iteration
+        Widen.pinned(e.unionByName(
+            e.select(col("dst").as("src"), col("src").as("dst")))) { undir =>
+          // one state per hop: every reached id, `_new` on the frontier
+          // (the ids this hop added); the closure is done when a hop adds none
+          def hop(state: DataFrame): DataFrame = {
+            val frontier = state.filter(col("_new"))
+            val fresh = undir.join(frontier, undir("src") === frontier("id"))
+              .select(col("dst").as("id")).distinct()
+              .join(state.select(col("id")), Seq("id"), "left_anti")
+            state.select(col("id"), lit(false).as("_new"))
+              .unionByName(fresh.select(col("id"), lit(true).as("_new")))
+          }
+          Widen.iterate(
+            dirty.join(ids, Seq("id")).distinct().select(col("id"), lit(true).as("_new")),
+            Seq.fill(maxHops)(hop _),
+            Some((_.filter(col("_new")).count() == 0, unconverged)))
+            .select(col("id"))
+        }
       }
-      require(frontierSize == 0,
-        s"pageRankDelta: closure did not converge in $maxHops hops")
-      reached0
+      val subEdges = e.join(reached.select(col("id").as("src")), Seq("src"))
+      val freshRanks = pageRank(reached, "id", subEdges, iters, dampNum, dampDen)
+        .select(col("id"), col("rank"), lit(true).as("recomputed"))
+      val carried = ids.join(reached, Seq("id"), "left_anti")
+        .join(prevRanks.select(col(idCol).as("id"), col("rank")), Seq("id"))
+        .select(col("id"), col("rank"), lit(false).as("recomputed"))
+      freshRanks.unionByName(carried)
+        .select(col("id").as(idCol), col("rank"), col("recomputed"))
     }
-    val subEdges = e.join(reached.select(col("id").as("src")), Seq("src"))
-    val freshRanks = pageRank(reached, "id", subEdges, iters, dampNum, dampDen)
-      .select(col("id"), col("rank"), lit(true).as("recomputed"))
-    val carried = ids.join(reached, Seq("id"), "left_anti")
-      .join(prevRanks.select(col(idCol).as("id"), col("rank")), Seq("id"))
-      .select(col("id"), col("rank"), lit(false).as("recomputed"))
-    freshRanks.unionByName(carried)
-      .select(col("id").as(idCol), col("rank"), col("recomputed"))
   }
 
   private def rankLoop(
@@ -349,8 +342,8 @@ object LinkGraph {
     val base = Scale * (dampDen - dampNum) / dampDen
 
     // node frame with per-node init and base mass; the seed mask joins
-    // ONCE here and persists across iterations
-    val nodeBase = (seeds match {
+    // ONCE here and is pinned across iterations
+    val nodeFrame = seeds match {
       case None =>
         nodes.select(col(idCol).as("id"), lit(Scale).as("_r0"), lit(base).as("_base"))
       case Some(sd) =>
@@ -363,83 +356,71 @@ object LinkGraph {
           .select(col("id"),
             when(col("_isSeed"), Scale).otherwise(0L).as("_r0"),
             when(col("_isSeed"), base).otherwise(0L).as("_base"))
-    }).localCheckpoint(true)
-
+    }
     // deg joined in once: every iteration reuses this frame (and on a
     // cluster, its partitioning) without recomputing the aggregation
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
-    val edgesDeg = edges.join(deg, "src")
+    val edgeFrame = edges.join(deg, "src")
       .select(col("src"), col("dst"), (lit(dampDen) * col("_deg")).as("_b"))
-      .localCheckpoint(true)
 
-    // Scale-adaptive small-graph path: nodeBase and edgesDeg are both
-    // checkpointed above (the SAME materializations the distributed
-    // loop needs), so the bounded collects read materialized blocks.
-    // When [[Widen.collectSmall]] admits both, run the identical
-    // integer recurrence in a driver loop — per-edge contribution term
-    // and per-dst sum are exactly the distributed expressions (sums
-    // stay far below 2^63 at bounded edge counts, where the distributed
-    // path's decimal(38,0) guard matters only at ~1e12-node scale) —
-    // instead of `iters` join+aggregate rounds with a checkpoint each.
-    val local = for {
-      ed <- Widen.collectSmall(edgesDeg, "src", "dst")
-      nb <- Widen.collectSmall(nodeBase, "id")
-    } yield {
-      val r = new java.util.HashMap[Long, Long](nb.length * 2)
-      nb.foreach { row => r.put(row.getLong(0), row.getLong(1)) }
-      var it0 = 0
-      while (it0 < iters) {
-        val contribs = new java.util.HashMap[Long, Long](nb.length * 2)
-        ed.foreach { row =>
-          // inner-join semantics: srcs outside the node set contribute nothing
-          if (r.containsKey(row.getLong(0))) {
-            val rs: Long = r.get(row.getLong(0))
-            val b = row.getLong(2)
-            val c = (rs / b) * dampNum + ((rs % b) * dampNum) / b
-            contribs.merge(row.getLong(1), c, Long.box(_) + Long.box(_))
+    // both pinned for the call: the returned frame is a driver Seq or
+    // the loop's last checkpoint, and reads neither
+    Widen.pinned(nodeFrame)(nodeBase => Widen.pinned(edgeFrame) { edgesDeg =>
+      // Scale-adaptive small-graph path: nodeBase and edgesDeg are the
+      // SAME materializations the distributed loop needs, so the
+      // bounded collects read materialized blocks. When
+      // [[Widen.collectSmall]] admits both, run the identical integer
+      // recurrence in a driver loop — per-edge contribution term and
+      // per-dst sum are exactly the distributed expressions (sums stay
+      // far below 2^63 at bounded edge counts, where the distributed
+      // path's decimal(38,0) guard matters only at ~1e12-node scale) —
+      // instead of `iters` join+aggregate rounds with a checkpoint each.
+      val local = for {
+        ed <- Widen.collectSmall(edgesDeg, "src", "dst")
+        nb <- Widen.collectSmall(nodeBase, "id")
+      } yield {
+        val r = new java.util.HashMap[Long, Long](nb.length * 2)
+        nb.foreach { row => r.put(row.getLong(0), row.getLong(1)) }
+        var it0 = 0
+        while (it0 < iters) {
+          val contribs = new java.util.HashMap[Long, Long](nb.length * 2)
+          ed.foreach { row =>
+            // inner-join semantics: srcs outside the node set contribute nothing
+            if (r.containsKey(row.getLong(0))) {
+              val rs: Long = r.get(row.getLong(0))
+              val b = row.getLong(2)
+              val c = (rs / b) * dampNum + ((rs % b) * dampNum) / b
+              contribs.merge(row.getLong(1), c, Long.box(_) + Long.box(_))
+            }
+            ()
           }
-          ()
+          nb.foreach { row =>
+            val id = row.getLong(0)
+            r.put(id, row.getLong(2) + contribs.getOrDefault(id, 0L))
+            ()
+          }
+          it0 += 1
         }
-        nb.foreach { row =>
-          val id = row.getLong(0)
-          r.put(id, row.getLong(2) + contribs.getOrDefault(id, 0L))
-          ()
-        }
-        it0 += 1
+        val spark = nodeBase.sparkSession
+        import spark.implicits._
+        nb.map(row => (row.getLong(0), r.get(row.getLong(0)))).toSeq.toDF("_prid", "rank")
+          .select(col("_prid").cast(nodes.schema(idCol).dataType).as(idCol), col("rank"))
       }
-      val spark = nodeBase.sparkSession
-      import spark.implicits._
-      val idT = nodes.schema(idCol).dataType
-      edgesDeg.unpersist()
-      nodeBase.unpersist()
-      nb.map(row => (row.getLong(0), r.get(row.getLong(0)))).toSeq
-        .toDF("_prid", "rank")
-        .select(col("_prid").cast(idT).as(idCol), col("rank"))
-    }
-    if (local.isDefined) return local.get
-    var ranks = nodeBase.select(col("id"), col("_r0").as("r"))
-      .localCheckpoint(true)
-    var it = 0
-    while (it < iters) {
-      val contribs = edgesDeg
-        .join(ranks, edgesDeg("src") === ranks("id"))
-        .select(col("dst"),
-          expr(s"(r DIV _b) * $dampNum + ((r % _b) * $dampNum) DIV _b").as("_c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("_c").cast(DecimalType(38, 0))).as("_s"))
-      val updated = nodeBase.select(col("id"), col("_base"))
-        .join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (col("_base") + coalesce(col("_s"), lit(0)).cast("long")).as("r"))
-        .localCheckpoint(true)
-      val prev = ranks
-      ranks = updated
-      prev.unpersist()
-      it += 1
-    }
-    val out = ranks.select(col("id").as(idCol), col("r").as("rank"))
-    edgesDeg.unpersist()
-    nodeBase.unpersist()
-    out
+      def round(ranks: DataFrame): DataFrame = {
+        val contribs = edgesDeg
+          .join(ranks, edgesDeg("src") === ranks("id"))
+          .select(col("dst"),
+            expr(s"(r DIV _b) * $dampNum + ((r % _b) * $dampNum) DIV _b").as("_c"))
+          .groupBy(col("dst"))
+          .agg(sum(col("_c").cast(DecimalType(38, 0))).as("_s"))
+        nodeBase.select(col("id"), col("_base"))
+          .join(contribs, col("id") === col("dst"), "left")
+          .select(col("id"),
+            (col("_base") + coalesce(col("_s"), lit(0)).cast("long")).as("r"))
+      }
+      local.getOrElse(
+        Widen.iterate(nodeBase.select(col("id"), col("_r0").as("r")), Seq.fill(iters)(round _))
+          .select(col("id").as(idCol), col("r").as("rank")))
+    })
   }
 }

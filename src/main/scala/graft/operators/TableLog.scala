@@ -2558,35 +2558,37 @@ object TableLog {
     }
     // ONE materialization: the null check, bounds, and sidecar write
     // all read the same decision (a non-deterministic keys frame must
-    // not publish keys its own null check never saw)
-    val k = keys.select(cols.map(col): _*).distinct().localCheckpoint(true)
-    if (k.isEmpty) { k.unpersist(); None }
-    else {
-      require(k.where(cols.map(c => col(c).isNull).reduce(_ || _)).isEmpty,
-        s"TableLog.$op: NULL key values — equality deletes match " +
-          "non-null keys only")
-      val aggExprs = cols.zipWithIndex.flatMap { case (c, i) =>
-        Seq(min(col(c)).as(s"_mn$i"), max(col(c)).as(s"_mx$i")) }
-      val aggRow = k.agg(aggExprs.head, aggExprs.tail: _*).collect()(0)
-      val bounds = cols.zipWithIndex.map { case (c, i) =>
-        val kind = byName(c).dataType match {
-          case org.apache.spark.sql.types.StringType => "s"
-          case _ => "l"
-        }
-        c -> ColBound(kind,
-          String.valueOf(aggRow.get(aggRow.fieldIndex(s"_mn$i"))),
-          String.valueOf(aggRow.get(aggRow.fieldIndex(s"_mx$i"))))
-      }.toMap
-      val f = fs(spark, path)
-      val dirName = s"e-${java.util.UUID.randomUUID()}"
-      val tmp = new Path(eqDir(path), s"_tmp_${java.util.UUID.randomUUID()}")
-      k.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      f.mkdirs(eqDir(path))
-      require(f.rename(tmp, new Path(eqDir(path), dirName)),
-        s"TableLog.$op: sidecar publish failed")
-      Some((EqDelete(dirName, v + 1, cols, bounds),
-        cur.eqBorn ++ cur.files.filterNot(cur.eqBorn.contains)
-          .map(_ -> (v + 1)).toMap))
+    // not publish keys its own null check never saw); released once
+    // the sidecar is written
+    Widen.pinned(keys.select(cols.map(col): _*).distinct()) { k =>
+      if (k.isEmpty) None
+      else {
+        require(k.where(cols.map(c => col(c).isNull).reduce(_ || _)).isEmpty,
+          s"TableLog.$op: NULL key values — equality deletes match " +
+            "non-null keys only")
+        val aggExprs = cols.zipWithIndex.flatMap { case (c, i) =>
+          Seq(min(col(c)).as(s"_mn$i"), max(col(c)).as(s"_mx$i")) }
+        val aggRow = k.agg(aggExprs.head, aggExprs.tail: _*).collect()(0)
+        val bounds = cols.zipWithIndex.map { case (c, i) =>
+          val kind = byName(c).dataType match {
+            case org.apache.spark.sql.types.StringType => "s"
+            case _ => "l"
+          }
+          c -> ColBound(kind,
+            String.valueOf(aggRow.get(aggRow.fieldIndex(s"_mn$i"))),
+            String.valueOf(aggRow.get(aggRow.fieldIndex(s"_mx$i"))))
+        }.toMap
+        val f = fs(spark, path)
+        val dirName = s"e-${java.util.UUID.randomUUID()}"
+        val tmp = new Path(eqDir(path), s"_tmp_${java.util.UUID.randomUUID()}")
+        k.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        f.mkdirs(eqDir(path))
+        require(f.rename(tmp, new Path(eqDir(path), dirName)),
+          s"TableLog.$op: sidecar publish failed")
+        Some((EqDelete(dirName, v + 1, cols, bounds),
+          cur.eqBorn ++ cur.files.filterNot(cur.eqBorn.contains)
+            .map(_ -> (v + 1)).toMap))
+      }
     }
   }
 
@@ -3614,27 +3616,47 @@ object TableLog {
           Some(readFiles(spark, path, cur0, cur0.files).schema))
         mergedSchema(base0, df.schema)
         val (names, stats) = writeDataFiles(spark, path, df)
-        var attempt = 0
-        while (attempt < maxRetries) {
-          tags(spark, path).get(tag) match {
-            case Some(v) => return v // a concurrent sink won this tag
-            case None =>
-              val v = latestVersion(spark, path)
-              val cur = readManifestFull(spark, path, v)
-              val base = cur.schema.orElse(
-                Some(readFiles(spark, path, cur, cur.files).schema))
-              val merged = mergedSchema(base, df.schema)
-              if (commitTryFull(spark, path, v + 1, cur.copy(
-                tag = Some(tag), files = cur.files ++ names,
-                stats = cur.stats ++ stats,
-                schema = Some(merged)))) return v + 1
-          }
-          attempt += 1
-        }
-        throw new IllegalStateException(
-          s"TableLog.appendBatchOptimistic: lost the commit race " +
-            s"$maxRetries times at $path — staged files go to vacuum")
+        commitTagged(spark, path, tag, names, stats, df.schema, Map.empty,
+          maxRetries, "appendBatchOptimistic").merge
     }
+
+  /** The one retry loop of [[appendBatchOptimistic]] and
+    * [[commitStagedOptimistic]]: version CAS attempts appending `names`
+    * (and their partition records `parts`) under `tag`. `Right(v)`: this
+    * call committed `v`; `Left(v)`: a concurrent commit carries `tag`,
+    * at `v`. Each attempt reads the latest version BEFORE the tags:
+    * manifests are immutable, so a same-tag commit at or below that
+    * version is in the tags, and one above it fails this CAS.
+    */
+  private def commitTagged(
+      spark: SparkSession, path: String, tag: String, names: Seq[String],
+      stats: Map[String, Map[String, ColBound]],
+      batchSchema: org.apache.spark.sql.types.StructType,
+      parts: Map[String, Seq[String]], maxRetries: Int, op: String): Either[Long, Long] = {
+    var attempt = 0
+    while (attempt < maxRetries) {
+      val v = latestVersion(spark, path)
+      tags(spark, path).get(tag) match {
+        case Some(won) => return Left(won)
+        case None =>
+          val cur = readManifestFull(spark, path, v)
+          if (parts.isEmpty) requireUnpartitioned(cur, op)
+          else require(cur.partCols.nonEmpty,
+            s"TableLog.$op: partition records on an unpartitioned table")
+          val base = cur.schema.orElse(
+            Some(readFiles(spark, path, cur, cur.files).schema))
+          val merged = mergedSchema(base, batchSchema)
+          if (commitTryFull(spark, path, v + 1, cur.copy(
+            tag = Some(tag), files = cur.files ++ names,
+            stats = cur.stats ++ stats, schema = Some(merged),
+            parts = cur.parts ++ parts))) return Right(v + 1)
+      }
+      attempt += 1
+    }
+    throw new IllegalStateException(
+      s"TableLog.$op: lost the commit race $maxRetries times at $path — " +
+        "staged files go to vacuum")
+  }
 
   /** [[appendBatchOptimistic]] for files ALREADY sitting under
     * `data/` (an executor-written streaming epoch — the catalog's
@@ -3682,31 +3704,8 @@ object TableLog {
       case Some(v) => dropStaged(v); v
       case None =>
         val stats = harvestStats(spark, path, names)
-        var attempt = 0
-        while (attempt < maxRetries) {
-          tags(spark, path).get(tag) match {
-            case Some(v) => dropStaged(v); return v
-            case None =>
-              val v = latestVersion(spark, path)
-              val cur = readManifestFull(spark, path, v)
-              if (parts.isEmpty)
-                requireUnpartitioned(cur, "commitStagedOptimistic")
-              else require(cur.partCols.nonEmpty,
-                "TableLog.commitStagedOptimistic: partition records on an " +
-                  "unpartitioned table")
-              val base = cur.schema.orElse(
-                Some(readFiles(spark, path, cur, cur.files).schema))
-              val merged = mergedSchema(base, batchSchema)
-              if (commitTryFull(spark, path, v + 1, cur.copy(
-                tag = Some(tag), files = cur.files ++ names,
-                stats = cur.stats ++ stats, schema = Some(merged),
-                parts = cur.parts ++ parts))) return v + 1
-          }
-          attempt += 1
-        }
-        throw new IllegalStateException(
-          s"TableLog.commitStagedOptimistic: lost the commit race " +
-            s"$maxRetries times at $path — staged files go to vacuum")
+        commitTagged(spark, path, tag, names, stats, batchSchema, parts, maxRetries,
+          "commitStagedOptimistic").fold(won => { dropStaged(won); won }, identity)
     }
   }
 

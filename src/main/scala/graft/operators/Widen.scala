@@ -45,9 +45,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * consumers (the operators here already ban those as shuffle keys).
   *
   * The materialization family lives here too: [[materialize]] (a
-  * checkpoint under the byte guard, for frames with two or more
-  * consumers) and [[pinned]] (an unguarded checkpoint scoped to a
-  * body and released after it, for pins that correctness needs).
+  * checkpoint under the byte guard, for a frame with two or more
+  * consumers, where it only saves recomputation), [[pinned]] (an
+  * unguarded checkpoint released after a body whose result does not
+  * read it) and [[iterate]] (a checkpointed loop that releases each
+  * superseded round and keeps only the one it returns).
   */
 object Widen {
   /** Key-preserving widen: hash-repartition to the target width on
@@ -113,22 +115,50 @@ object Widen {
     * the pin is needed for correctness or lineage whatever the size, so
     * there is no byte guard: an ingest batch that must be read before
     * the index it probes is mutated, a frame several joins of one
-    * operator read. Use [[materialize]] where the checkpoint only saves
-    * recomputation: there the guard keeps large inputs lazy.
+    * operator read.
     *
     * `body`'s result must not read the pinned frame lazily: its blocks
     * are gone once `pinned` returns. Return a value, or a frame that is
     * itself materialized (written, collected or checkpointed) inside
-    * `body`. The release unpersists the checkpoint's own RDD:
-    * `Dataset.unpersist` only drops cache-manager entries, and a local
-    * checkpoint is not one, so on a checkpointed frame it frees nothing.
+    * `body`.
     */
   def pinned[A](df: DataFrame)(body: DataFrame => A): A = {
     val p = df.localCheckpoint(eager = true)
-    try body(p)
-    finally p.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false))
+    try body(p) finally release(p)
   }
+
+  /** The loop member of the family: checkpoint `init`, then run `steps`
+    * in order, each over the last round's checkpoint, checkpointing its
+    * output eagerly and then releasing the round it replaces. The
+    * returned frame is the last checkpoint; the caller keeps it.
+    * `until` (a probe and a failure message) ends the loop at the first
+    * checkpoint the probe holds for, and fails the call with the
+    * message when `steps` run out first: an unconverged fixed point is
+    * a wrong answer. That failure, or a throwing step or probe, leaves
+    * nothing pinned. A walk whose last round is read once may run it
+    * lazily over the result: `step(iterate(init, Seq.fill(n - 1)(step)))`.
+    */
+  def iterate(
+      init: DataFrame, steps: Seq[DataFrame => DataFrame],
+      until: Option[(DataFrame => Boolean, String)] = None): DataFrame = {
+    var state = init.localCheckpoint(eager = true)
+    try {
+      val converged = steps.iterator.exists { step =>
+        val next = step(state).localCheckpoint(eager = true)
+        release(state)
+        state = next
+        until.exists(_._1(state))
+      }
+      until.foreach { case (_, failure) => require(converged, failure) }
+      state
+    } catch { case e: Throwable => release(state); throw e }
+  }
+
+  // `Dataset.unpersist` only drops cache-manager entries, and a local
+  // checkpoint is not one: free the checkpoint's own RDD instead
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /** The one gate of every driver-local fast path (graph fixed points,
     * union-find, the ANN walk): `Some(rows)` when `df` fits the driver

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Widen
+
 /** Graph-based ANN over the IVF coarse partitioning (the round-10
   * verdict item 3): a per-cell k-nearest-neighbor graph (the NSW/
   * Vamana family's neighborhood structure, built distributed) searched
@@ -112,14 +114,17 @@ object GraphAnn {
     }
   }
 
-  /** The base-layer beam walk from an explicit entry pool — shared by
-    * the fixed-nprobe [[searchTopK]] and the hierarchical
-    * [[searchTopKHier]] (which differ ONLY in how pool_0 is chosen).
+  /** The base-layer beam walk of [[searchTopK]] and [[searchTopKHier]],
+    * which differ ONLY in how pool_0 is chosen: the `entry` rounds turn
+    * `init` into pool_0 (none for [[searchTopK]]), then `hops` (>= 1)
+    * beam rounds follow, all on one [[Widen.iterate]] loop. The last
+    * hop runs lazily, so the result reads only the round before it.
     */
   private def baseWalk(
       corpus: DataFrame, idCol: String, vecCol: String,
-      qb: DataFrame, pool0: DataFrame, edges: DataFrame,
-      k: Int, hops: Int, beam: Int): DataFrame = {
+      qb: DataFrame, init: DataFrame, edges: DataFrame,
+      k: Int, hops: Int, beam: Int,
+      entry: Seq[DataFrame => DataFrame] = Nil): DataFrame = {
     val c = corpus.select(col(idCol).cast("long").as("node"),
       transform(col(vecCol), x => x.cast("double")).as("_cv"),
       Ann.l2norm(col(vecCol)).as("_cn"))
@@ -130,24 +135,19 @@ object GraphAnn {
         .join(qb.select(col("query_id"), col("_qv"), col("_qn")), Seq("query_id"))
         .withColumn("_cos",
           Ann.dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-    var pool = pool0
-    var i = 0
-    while (i < hops) {
-      // checkpoint each round: pool_i feeds BOTH the beam rank and the
-      // union, and without the cut the repeated subtree doubles per
-      // hop (2^hops recompute of the early rounds — measured 7 s vs
-      // ~1 s at sf0.1). The frames are tiny (<= queries * pool size)
-      pool = pool.localCheckpoint()
+    // each round reads a checkpoint: pool_i feeds BOTH the beam rank
+    // and the union, and without the cut the repeated subtree doubles
+    // per hop (2^hops recompute of the early rounds — measured 7 s vs
+    // ~1 s at sf0.1). The frames are tiny (<= queries * pool size)
+    def hop(pool: DataFrame): DataFrame = {
       val beamFront = scored(pool)
         .withColumn("_rk", row_number().over(wq))
         .filter(col("_rk") <= beam)
         .select(col("query_id"), col("node"))
-      val expanded = beamFront.join(edges, col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node"))
-      pool = pool.unionByName(expanded).distinct()
-      i += 1
+      pool.unionByName(beamFront.join(edges, col("node") === col("src"))
+        .select(col("query_id"), col("dst").as("node"))).distinct()
     }
-    scored(pool)
+    scored(hop(Widen.iterate(init, entry ++ Seq.fill(hops - 1)(hop _))))
       .filter(col("node") =!= col("query_id"))
       .withColumn("rank", row_number().over(wq))
       .filter(col("rank") <= k)
@@ -268,14 +268,17 @@ object GraphAnn {
     */
   private def localCos(
       ctx: LocalCtx, lq: LocalQuery, node: Long): Option[java.lang.Double] =
-    ctx.vecs.get(node).map { case (cv, cn) =>
-      if (cv.length != lq.v.length) null
-      else {
-        var acc = 0.0
-        var i = 0
-        while (i < cv.length) { acc += cv(i) * lq.v(i); i += 1 }
-        java.lang.Double.valueOf(acc / (cn * lq.n))
-      }
+    ctx.vecs.get(node).map { case (cv, cn) => cosineTo(lq, cv, cn) }
+
+  /** `lq`'s cosine against vector `v` of norm `n` (null on a length
+    * mismatch), shared by the node and the medoid scoring. */
+  private def cosineTo(lq: LocalQuery, v: Array[Double], n: Double): java.lang.Double =
+    if (v.length != lq.v.length) null
+    else {
+      var acc = 0.0
+      var i = 0
+      while (i < v.length) { acc += v(i) * lq.v(i); i += 1 }
+      java.lang.Double.valueOf(acc / (n * lq.n))
     }
 
   /** The per-query beam walk, identical to [[baseWalk]]'s pool
@@ -337,17 +340,7 @@ object GraphAnn {
     val seedCell = ctx.entries.iterator.map(_._1).min
     val rows = ctx.queries.iterator.flatMap { lq =>
       def cosCell(cell: Int): Option[(Long, java.lang.Double)] =
-        medoid.get(cell).map { case (mv, mn) =>
-          val c: java.lang.Double =
-            if (mv.length != lq.v.length) null
-            else {
-              var acc = 0.0
-              var i = 0
-              while (i < mv.length) { acc += mv(i) * lq.v(i); i += 1 }
-              java.lang.Double.valueOf(acc / (mn * lq.n))
-            }
-          (cell.toLong, c)
-        }
+        medoid.get(cell).map { case (mv, mn) => (cell.toLong, cosineTo(lq, mv, mn)) }
       val cellPool = scala.collection.mutable.HashSet[Int](seedCell)
       def scoredCells(): Array[(Long, java.lang.Double)] =
         cellPool.iterator.flatMap(cosCell).toArray.sortWith(rankLt)
@@ -474,8 +467,8 @@ object GraphAnn {
       cellEdges: Array[(Int, Int)], k: Int, entryProbe: Int = 4,
       cellHops: Int = 4, cellBeam: Int = 4, hops: Int = 3, beam: Int = 8,
       maxQueries: Int = Ann.MaxQueries): DataFrame = {
-    require(entryProbe >= 1 && cellHops >= 1 && cellBeam >= 1,
-      "searchTopKHier: entryProbe, cellHops, cellBeam >= 1")
+    require(entryProbe >= 1 && cellHops >= 1 && cellBeam >= 1 && hops >= 1,
+      "searchTopKHier: entryProbe, cellHops, cellBeam, hops >= 1")
     Ann.requireBoundedQueries(queries, maxQueries, "searchTopKHier")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -490,44 +483,44 @@ object GraphAnn {
       case None => ()
     }
     val qb = broadcast(q)
-    // medoid vectors: the per-cell entry point's REAL vector —
-    // checkpointed (it feeds every cell-walk round) then broadcast
-    val medoids = broadcast(entries
+    // medoid vectors: the per-cell entry point's REAL vector — pinned
+    // (it feeds every cell-walk round) then broadcast; the returned
+    // frame does not read it, as the walk checkpoints pool_0 first
+    Widen.pinned(entries
       .join(corpus.select(col(idCol).cast("long").as("entry_id"),
         transform(col(vecCol), x => x.cast("double")).as("_mv"),
         Ann.l2norm(col(vecCol)).as("_mn")), Seq("entry_id"))
-      .select(col("cell"), col("_mv"), col("_mn"))
-      .localCheckpoint())
-    val ce = broadcast(cellEdges.toSeq.toDF("csrc", "cdst"))
-    val seedCell = entries.agg(min(col("cell"))).collect()(0).getInt(0)
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("cell").asc)
-    def scoredCells(p: DataFrame): DataFrame =
-      p.join(medoids, Seq("cell"))
-        .join(qb.select(col("query_id"), col("_qv"), col("_qn")), Seq("query_id"))
-        .withColumn("_cos",
-          Ann.dot(col("_mv"), col("_qv")) / (col("_mn") * col("_qn")))
-    var cellPool = qb.select(col("query_id"), lit(seedCell).as("cell"))
-    var i = 0
-    while (i < cellHops) {
-      cellPool = cellPool.localCheckpoint()
-      val front = scoredCells(cellPool)
-        .withColumn("_rk", row_number().over(wc))
-        .filter(col("_rk") <= cellBeam)
-        .select(col("query_id"), col("cell"))
-      val expanded = front.join(ce, col("cell") === col("csrc"))
-        .select(col("query_id"), col("cdst").as("cell"))
-      cellPool = cellPool.unionByName(expanded).distinct()
-      i += 1
+      .select(col("cell"), col("_mv"), col("_mn"))) { medoids =>
+      val ce = broadcast(cellEdges.toSeq.toDF("csrc", "cdst"))
+      val seedCell = entries.agg(min(col("cell"))).collect()(0).getInt(0)
+      val wc = Window.partitionBy(col("query_id"))
+        .orderBy(col("_cos").desc, col("cell").asc)
+      def scoredCells(p: DataFrame): DataFrame =
+        p.join(broadcast(medoids), Seq("cell"))
+          .join(qb.select(col("query_id"), col("_qv"), col("_qn")), Seq("query_id"))
+          .withColumn("_cos",
+            Ann.dot(col("_mv"), col("_qv")) / (col("_mn") * col("_qn")))
+      def cellHop(cellPool: DataFrame): DataFrame = {
+        val front = scoredCells(cellPool)
+          .withColumn("_rk", row_number().over(wc))
+          .filter(col("_rk") <= cellBeam)
+          .select(col("query_id"), col("cell"))
+        cellPool.unionByName(front.join(ce, col("cell") === col("csrc"))
+          .select(col("query_id"), col("cdst").as("cell"))).distinct()
+      }
+      // the last cell hop also picks the entry cells and their pool_0
+      def entryPool(cellPool: DataFrame): DataFrame =
+        scoredCells(cellHop(cellPool))
+          .withColumn("_rk", row_number().over(wc))
+          .filter(col("_rk") <= entryProbe)
+          .select(col("query_id"), col("cell"))
+          .join(entries, Seq("cell"))
+          .select(col("query_id"), col("entry_id").as("node"))
+          .distinct()
+      baseWalk(corpus, idCol, vecCol, qb,
+        qb.select(col("query_id"), lit(seedCell).as("cell")), edges, k, hops, beam,
+        Seq.fill(cellHops - 1)(cellHop _) :+ (entryPool _))
     }
-    val entryCells = scoredCells(cellPool)
-      .withColumn("_rk", row_number().over(wc))
-      .filter(col("_rk") <= entryProbe)
-      .select(col("query_id"), col("cell"))
-    val pool0 = entryCells.join(entries, Seq("cell"))
-      .select(col("query_id"), col("entry_id").as("node"))
-      .distinct()
-    baseWalk(corpus, idCol, vecCol, qb, pool0, edges, k, hops, beam)
   }
 
   /** Train + build + hierarchical search in one call (the
@@ -735,7 +728,7 @@ object GraphAnn {
         .withColumn("_ga_id", col(idCol).cast("long"))
         .join(ledger.select(col("id").as("_ga_id")), Seq("_ga_id"), "left_anti")
         .drop("_ga_id")
-      graft.operators.Widen.pinned(unseen) { fresh =>
+      Widen.pinned(unseen) { fresh =>
         if (fresh.isEmpty) ()
         else {
           val centroids = Ivf.loadCentroids(spark, dir)
@@ -771,24 +764,33 @@ object GraphAnn {
     }
   }
 
-  /** Search a persisted graph index (no retraining/rebuild): the
-    * stored per-cell directed lists dedup + symmetrize at load —
-    * [[build]]'s final step — so results equal a fresh build+search.
+  /** A persisted index's quantizer, vectors, edges and entries. The
+    * stored per-cell directed lists dedup + symmetrize at load, as
+    * [[build]]'s final step does. The index-sized edges and entries are
+    * checkpointed once (every walk hop consumes `edges`; uncut, the
+    * symmetrize+distinct re-runs per hop); corpus-sized `vectors` stays
+    * a parquet scan, which the narrow per-hop joins read.
+    */
+  private def loadIndex(spark: SparkSession, dir: String)
+      : (Array[Array[Double]], DataFrame, DataFrame, DataFrame) = {
+    val centroids = Ivf.loadCentroids(spark, dir)
+    val vectors = spark.read.parquet(s"$dir/vectors.parquet")
+    val directed = spark.read.parquet(s"$dir/edges.parquet")
+      .select(col("src"), col("dst")).distinct()
+    val edges = directed
+      .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().localCheckpoint()
+    (centroids, vectors, edges, spark.read.parquet(s"$dir/entries.parquet").localCheckpoint())
+  }
+
+  /** Search a persisted graph index (no retraining/rebuild); results
+    * equal a fresh build+search.
     */
   def searchIndex(
       spark: SparkSession, dir: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, nprobe: Int = 1, hops: Int = 3, beam: Int = 8): DataFrame = {
-    val centroids = Ivf.loadCentroids(spark, dir)
-    val vectors = spark.read.parquet(s"$dir/vectors.parquet")
-    val directed = spark.read.parquet(s"$dir/edges.parquet")
-      .select(col("src"), col("dst")).distinct()
-    // same index-frame cut as searchIndexHier: each hop consumes
-    // `edges`; without it the symmetrize+distinct re-executes per hop
-    val edges = directed
-      .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val entries = spark.read.parquet(s"$dir/entries.parquet").localCheckpoint()
+    val (centroids, vectors, edges, entries) = loadIndex(spark, dir)
     searchTopK(vectors, "id", "vec", queries, qidCol, qvecCol,
       centroids, edges, entries, k, nprobe, hops, beam)
   }
@@ -797,28 +799,14 @@ object GraphAnn {
     * come from the stored cell-layer graph (`cell_edges.parquet`,
     * written by [[writeIndex]]); pre-cell-layer indexes rebuild it on
     * the fly from the stored centroids (cheap — nlist-sized). Results
-    * equal a fresh build + hier search (spec-pinned): the stored
-    * per-cell directed lists symmetrize at load exactly as
-    * [[build]]'s final step.
+    * equal a fresh build + hier search (spec-pinned).
     */
   def searchIndexHier(
       spark: SparkSession, dir: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int, entryProbe: Int = 4, cellHops: Int = 4, cellBeam: Int = 4,
       hops: Int = 3, beam: Int = 8): DataFrame = {
-    val centroids = Ivf.loadCentroids(spark, dir)
-    val vectors = spark.read.parquet(s"$dir/vectors.parquet")
-    val directed = spark.read.parquet(s"$dir/edges.parquet")
-      .select(col("src"), col("dst")).distinct()
-    // checkpoint the INDEX-sized frames once: every walk hop consumes
-    // `edges`, and without the cut Catalyst re-executes the
-    // symmetrize+distinct per hop (9 re-reads for cellHops=4/hops=5).
-    // `vectors` stays a parquet scan — corpus-sized, the scalable
-    // choice; the per-hop candidate joins against it are narrow.
-    val edges = directed
-      .unionByName(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    val entries = spark.read.parquet(s"$dir/entries.parquet").localCheckpoint()
+    val (centroids, vectors, edges, entries) = loadIndex(spark, dir)
     val cePath = new org.apache.hadoop.fs.Path(s"$dir/cell_edges.parquet")
     val hasCe = cePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(cePath)

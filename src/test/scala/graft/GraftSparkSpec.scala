@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerInterop
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,6 +65,39 @@ abstract class GraftSparkSpec extends AnyFunSuite {
       GraftListenerInterop.waitUntilListenerBusEmpty(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     found.asScala.toSeq
+  }
+
+  /** Runs `call` and collects its result. Returns the rows, the jobs
+    * both ran, and the RDDs that stay persisted afterwards although the
+    * result does not read them: a loop round or pin never released.
+    * `getPersistentRDDs` holds its RDDs weakly, so an unreleased round
+    * would vanish from it whenever the JVM happens to collect garbage;
+    * every persisted RDD seen at a job start is held until the check.
+    */
+  protected def loopFootprint(call: => DataFrame): (Seq[Row], Int, Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val held = new ConcurrentLinkedQueue[AnyRef]
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        held.addAll(sc.getPersistentRDDs.values.asJavaCollection)
+      }
+    }
+    GraftListenerInterop.waitUntilListenerBusEmpty(sc)
+    sc.addSparkListener(listener)
+    val (out, rows) =
+      try {
+        val out = call
+        val rows = out.collect().toSeq
+        GraftListenerInterop.waitUntilListenerBusEmpty(sc)
+        (out, rows)
+      } finally sc.removeSparkListener(listener)
+    val read = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+    val left = (sc.getPersistentRDDs.keySet -- before).toSet -- read
+    held.clear()
+    (rows, jobs.get, left)
   }
 
   /** Column names of every frame `localCheckpoint`ed while `body` runs. */

@@ -233,6 +233,32 @@ class MaterializeSpec extends GraftSparkSpec with AdaptiveSparkPlanHelper {
     assert((persisted -- before).isEmpty, "released on throw")
   }
 
+  test("iterate: each superseded round released, fails closed, nothing pinned after a throw") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val held = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val step = (s: DataFrame) => {
+      held += (persisted -- before).size
+      s.withColumn("id", col("id") + 1)
+    }
+    val out = Widen.iterate(spark.range(10).toDF(), Seq.fill(4)(step))
+    assert(held.toSeq == Seq(1, 1, 1, 1), s"rounds held during each step: $held")
+    assert((persisted -- before).size == 1, "only the returned round stays")
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == (4L until 14L))
+    val converging = Widen.iterate(spark.range(10).toDF(), Seq.fill(50)(step),
+      Some((_.filter(col("id") < 3).count() == 0, "unreached")))
+    assert(converging.agg(org.apache.spark.sql.functions.min("id")).head.getLong(0) == 3L,
+      "stops at the first round whose probe holds")
+    val before2 = persisted
+    val e = intercept[IllegalArgumentException](Widen.iterate(spark.range(10).toDF(),
+      Seq.fill(2)(step), Some((_.filter(col("id") < 5).count() == 0, "did not reach 5"))))
+    assert(e.getMessage.contains("did not reach 5"))
+    assert((persisted -- before2).isEmpty, "nothing pinned when the rounds run out")
+    intercept[IllegalStateException](Widen.iterate(spark.range(10).toDF(),
+      Seq(step, (_: DataFrame) => throw new IllegalStateException("step failed"))))
+    assert((persisted -- before2).isEmpty, "nothing pinned after a throwing step")
+  }
+
   /** A documents table of `(doc_id, text)` rows in a fresh dir, the
     * layout `SparkEntry.curationStage4` reads; returns the dir. */
   private def documentsDir(docs: Seq[(Long, String)]): String = {

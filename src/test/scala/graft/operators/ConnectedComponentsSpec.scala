@@ -71,6 +71,13 @@ class ConnectedComponentsSpec extends GraftSparkSpec {
     val dist = distributed(spark)(Dedup.connectedComponents(vertices, "id", edges))
     assert(!localRoute(dist))
     assert(sortedRows(dist) === sortedRows(local))
+    // the loop releases every superseded round and the edge pin, within
+    // the jobs the hand-written loop ran on this fixture
+    val (rows, jobs, leaked) =
+      distributed(spark)(loopFootprint(Dedup.connectedComponents(vertices, "id", edges)))
+    assert(rows.map(_.toString).sorted === sortedRows(local))
+    assert(leaked.isEmpty, s"left persisted: $leaked")
+    assert(jobs <= 27, s"jobs: $jobs")
     // non-integral vertex ids keep to the distributed labeling
     val strV = (1 to 12).map(_.toString).toDF("id").localCheckpoint()
     assert(!localRoute(Dedup.connectedComponents(strV, "id", edges)))

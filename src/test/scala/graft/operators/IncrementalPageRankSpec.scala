@@ -90,6 +90,13 @@ class IncrementalPageRankSpec extends GraftSparkSpec {
     spark.conf.set("spark.graft.graph.localEdgeLimit", "0")
     try assert(run() === local, "distributed closure must equal local")
     finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
+    // the closure and rank loops release every superseded round and pin,
+    // within the jobs the hand-written loops ran on this fixture
+    val (rows, jobs, leaked) = distributed(spark)(loopFootprint(LinkGraph.pageRankDelta(
+      ringNodes, "id", newE, ringNodes, ringEdges, prev, iters = 4)))
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1) === local)
+    assert(leaked.isEmpty, s"left persisted: $leaked")
+    assert(jobs <= 74, s"jobs: $jobs")
   }
 
   test("partitioning invariance of the delta path") {

@@ -233,12 +233,21 @@ class LinkGraphSpec extends GraftSparkSpec {
       "pageRank" -> (() => LinkGraph.pageRank(nodes, "id", edges, iters = 4)),
       "personalizedPageRank" -> (() =>
         LinkGraph.personalizedPageRank(nodes, "id", edges, seeds, iters = 4)))
+    // the rank loops release every superseded iteration and their pins,
+    // within the jobs their hand-written loops ran on this fixture
+    val jobBudget = Map("pageRank" -> 24, "personalizedPageRank" -> 26)
     for ((name, run) <- routed) {
       val local = run()
       assert(localRoute(local), s"$name: integral ids must take the local route")
       val dist = distributed(spark)(run())
       assert(!localRoute(dist), s"$name: row cap 0 must take the distributed route")
       assert(sortedRows(dist) === sortedRows(local), name)
+      jobBudget.get(name).foreach { maxJobs =>
+        val (rows, jobs, leaked) = distributed(spark)(loopFootprint(run()))
+        assert(rows.map(_.toString).sorted === sortedRows(local), name)
+        assert(leaked.isEmpty, s"$name: left persisted: $leaked")
+        assert(jobs <= maxJobs, s"$name: jobs: $jobs")
+      }
     }
     // clusteringCoeff checkpoints its output on both routes; its
     // triangle step is the routed part

@@ -350,18 +350,28 @@ class GraphAnnSpec extends GraftSparkSpec {
     val cg = GraphAnn.buildCellGraph(centroids, cellM = 4)
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
-    def flat() = norm(GraphAnn.searchTopK(cor, "vec_id", "embedding",
+    def flatWalk() = GraphAnn.searchTopK(cor, "vec_id", "embedding",
       qs, "vec_id", "embedding", centroids, edges, entries,
-      k = 5, nprobe = 2, hops = 3, beam = 8))
-    def hier() = norm(GraphAnn.searchTopKHier(cor, "vec_id", "embedding",
+      k = 5, nprobe = 2, hops = 3, beam = 8)
+    def hierWalk() = GraphAnn.searchTopKHier(cor, "vec_id", "embedding",
       qs, "vec_id", "embedding", centroids, edges, entries, cg,
-      k = 5, entryProbe = 4, cellHops = 4, cellBeam = 4, hops = 3, beam = 8))
+      k = 5, entryProbe = 4, cellHops = 4, cellBeam = 4, hops = 3, beam = 8)
+    def flat() = norm(flatWalk())
+    def hier() = norm(hierWalk())
     val (localFlat, localHier) = (flat(), hier())
     spark.conf.set("spark.graft.graph.localEdgeLimit", "0")
     try {
       assert(flat() === localFlat, "distributed flat walk must equal local")
       assert(hier() === localHier, "distributed hier walk must equal local")
     } finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
+    // the walks release every superseded round and the medoid pin,
+    // within the jobs the hand-written loops ran on this fixture
+    val walks = Seq(("searchTopK", () => flatWalk(), 35), ("searchTopKHier", () => hierWalk(), 67))
+    for ((name, walk, maxJobs) <- walks) {
+      val (_, jobs, leaked) = graft.operators.LinkGraphSpec.distributed(spark)(loopFootprint(walk()))
+      assert(leaked.isEmpty, s"$name: left persisted: $leaked")
+      assert(jobs <= maxJobs, s"$name: jobs: $jobs")
+    }
     // the shared byte guard (widen.maxBytes) must route to the SAME
     // distributed path: equality again with a 1-byte budget
     spark.conf.set("spark.graft.widen.maxBytes", "1")
